@@ -10,16 +10,17 @@
 #   scripts/verify_fast.sh tests/test_bpe.py tests/test_plans.py
 #
 # Tuning (env):
-#   VERIFY_JOBS       parallel workers            (default 8)
-#   VERIFY_SPARK_CPUS local[N] cores per worker   (default 8; 2x
-#                     oversubscribed on 32 cores — Spark local tests are
-#                     mostly stage-latency-bound, not core-bound)
+#   VERIFY_JOBS       parallel workers            (default nproc/4, min 1)
+#   VERIFY_SPARK_CPUS local[N] cores per worker   (default 2*nproc/JOBS,
+#                     at most 8: 2x oversubscribed — Spark local tests
+#                     are mostly stage-latency-bound, not core-bound)
 #   VERIFY_SPARK_MEM  driver memory per worker    (default 10g)
 set -u
 cd "$(dirname "$0")/.."
 
-JOBS="${VERIFY_JOBS:-8}"
-CPUS="${VERIFY_SPARK_CPUS:-8}"
+NPROC="$(nproc)"
+JOBS="${VERIFY_JOBS:-$(( NPROC / 4 > 0 ? NPROC / 4 : 1 ))}"
+CPUS="${VERIFY_SPARK_CPUS:-$(( NPROC / JOBS * 2 < 8 ? NPROC / JOBS * 2 : 8 ))}"
 MEM="${VERIFY_SPARK_MEM:-10g}"
 LOGDIR="$(mktemp -d /tmp/verify_fast.XXXXXX)"
 export LOGDIR CPUS MEM
@@ -50,6 +51,12 @@ else
     tests/test_properties.py
     tests/test_rounding.py
   )
+  for f in "${SLOW[@]}"; do
+    if [ ! -f "$f" ]; then
+      echo "verify_fast.sh: SLOW names a missing test file: $f" >&2
+      exit 2
+    fi
+  done
   FILES=("${SLOW[@]}")
   while IFS= read -r f; do
     case " ${SLOW[*]} " in *" $f "*) ;; *) FILES+=("$f") ;; esac

@@ -48,6 +48,8 @@ class EngineConfig:
     rollup_window: str = "1 hour"
 
     def __post_init__(self) -> None:
+        if self.sma_fast_window < 1 or self.volatility_window < 1:
+            raise ValueError("sma_fast_window and volatility_window must be at least 1")
         if self.sma_fast_window >= self.sma_slow_window:
             raise ValueError("sma_fast_window must be smaller than sma_slow_window")
 

@@ -101,12 +101,15 @@ _PARQUET_SCHEMA_CACHE: dict[tuple[str, int, int], T.StructType] = {}
 def _schema_cache_key(path: str) -> tuple[str, int, int]:
     import os
 
+    # A directory's mtime/size do not change when a data file inside it is
+    # rewritten in place, so directory-style tables (and remote paths, which
+    # have no stat target) are never cached: the key can't match any entry.
+    if os.path.isdir(path):
+        return (path, -1, -1)
     try:
         st = os.stat(path)
         return (path, st.st_mtime_ns, st.st_size)
     except OSError:
-        # directory-style or remote parquet path: no single stat target —
-        # never cache (key can't match any stored entry)
         return (path, -1, -1)
 
 

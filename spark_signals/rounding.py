@@ -52,15 +52,19 @@ def micro_units_sql(expr: str, dp: int) -> str:
 
 
 def sql_str_lit(value) -> str:
-    """A Python string as a Spark-SQL string literal, quotes escaped.
+    """A Python string as a Spark-SQL string literal, quotes and
+    backslashes escaped.
 
     The SQL-text construction rewrite (r16) interpolates config/user
     strings (strategy_run_id, execution_mode, window labels, source names)
     into selectExpr text; a bare f-string ``'{value}'`` breaks — or injects
     SQL — the moment a value carries a single quote, where the former
     ``F.lit`` handled arbitrary strings (r16 advisory). Doubling embedded
-    quotes is the ANSI escape both engines parse."""
-    return "'" + str(value).replace("'", "''") + "'"
+    quotes is the ANSI escape both engines parse. Spark's parser also reads
+    backslash escapes (``spark.sql.parser.escapedStringLiterals`` is false
+    by default), so a lone ``\\`` would swallow the next character — or
+    the closing quote — unless it is doubled first."""
+    return "'" + str(value).replace("\\", "\\\\").replace("'", "''") + "'"
 
 
 def sround_py(x: float, dp: int) -> float:

@@ -13,6 +13,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half the host's RAM, at most 90g. Local mode runs every task in the
+    driver JVM; a heap ceiling above physical memory lets the heap grow
+    until the kernel OOM-kills the JVM partway through a long session."""
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError):
+        return "90g"
+    return f"{max(1, min(90, total // 2**31))}g"
+
+
 def get_spark(app_name: str = "spark-signals", shuffle_partitions: int | None = None) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if shuffle_partitions is None:
@@ -38,7 +49,7 @@ def get_spark(app_name: str = "spark-signals", shuffle_partitions: int | None = 
         # (~25% of plan-construction wall measured at r16); the capture has
         # zero effect on plans or results.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "90g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.streaming.schemaInference", "false")

@@ -32,3 +32,20 @@ def test_from_env(monkeypatch):
     assert cfg.sma_fast_window == 5
     assert cfg.sma_slow_window == 15
     assert cfg.transaction_cost_rate == 7 / 10_000
+
+
+@pytest.mark.parametrize(
+    "kwargs",
+    [
+        {"volatility_window": 0},
+        {"volatility_window": -1},
+        {"sma_fast_window": 0},
+        {"sma_fast_window": -5},
+    ],
+    ids=["volatility_0", "volatility_neg", "fast_0", "fast_neg"],
+)
+def test_windows_below_one_are_rejected(kwargs):
+    # a zero-width volatility window would grow the streaming replay's
+    # window without bound and diverge from the batch plan
+    with pytest.raises(ValueError):
+        EngineConfig(**kwargs)

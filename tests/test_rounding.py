@@ -19,7 +19,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from spark_signals.rounding import micro_units, sround, sround_py
+from spark_signals.rounding import micro_units, sql_str_lit, sround, sround_py
 
 # values around grid boundaries at several dp, plus wide-range floats
 _boundaryish = st.integers(-10**7, 10**7).flatmap(
@@ -76,3 +76,31 @@ def test_micro_units_exact_integer_recovery(spark):
         assert g == math.floor(x * 1e4 + 0.5000001), x
         # lossless: round-tripping the integer reproduces the 4-decimal value
         assert abs(g / 1e4 - x) < 1e-9, x
+
+
+@pytest.mark.parametrize(
+    "val",
+    ["back\\slash", "trail\\", "\\'", "a\\nb", "\\\\", "o'brien\\"],
+    ids=["inner", "trailing", "before_quote", "before_n", "double", "quote_trailing"],
+)
+def test_sql_str_lit_round_trips_backslashes(spark, val):
+    """Spark's parser reads backslash escapes in string literals, so an
+    unescaped value ending in a backslash breaks the SQL text and
+    'back\\slash' comes back as 'backslash'."""
+    got = spark.range(1).selectExpr(f"{sql_str_lit(val)} AS s").first().s
+    assert got == val
+
+
+def test_backslash_run_id_survives_signal_plan(spark):
+    """The signal plan interpolates strategy_run_id into its SQL text."""
+    from spark_signals.config import EngineConfig
+    from spark_signals.pipeline import build_pipeline
+    from tests.conftest import make_ticks
+
+    cfg = EngineConfig(
+        sma_fast_window=2, sma_slow_window=4, strategy_run_id="run\\"
+    )
+    mids = [100.0] * 5 + [110.0] * 5 + [90.0] * 5
+    out = build_pipeline(make_ticks(spark, mids), cfg)
+    ids = {r.strategy_run_id for r in out.signals_decisions.collect()}
+    assert ids == {"run\\"}
