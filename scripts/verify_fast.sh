@@ -14,14 +14,18 @@
 #   VERIFY_SPARK_CPUS local[N] cores per worker   (default 2*nproc/JOBS,
 #                     at most 8: 2x oversubscribed — Spark local tests
 #                     are mostly stage-latency-bound, not core-bound)
-#   VERIFY_SPARK_MEM  driver memory per worker    (default 10g)
+#   VERIFY_SPARK_MEM  driver memory per worker    (default half the host
+#                     RAM / JOBS, min 1g — session.get_spark's rule
+#                     shared across the workers)
 set -u
 cd "$(dirname "$0")/.."
 
 NPROC="$(nproc)"
 JOBS="${VERIFY_JOBS:-$(( NPROC / 4 > 0 ? NPROC / 4 : 1 ))}"
 CPUS="${VERIFY_SPARK_CPUS:-$(( NPROC / JOBS * 2 < 8 ? NPROC / JOBS * 2 : 8 ))}"
-MEM="${VERIFY_SPARK_MEM:-10g}"
+HOST_BYTES="$(( $(getconf _PHYS_PAGES) * $(getconf PAGE_SIZE) ))"
+MEM_GB="$(( HOST_BYTES / 2**31 / JOBS ))"
+MEM="${VERIFY_SPARK_MEM:-$(( MEM_GB > 0 ? MEM_GB : 1 ))g}"
 LOGDIR="$(mktemp -d /tmp/verify_fast.XXXXXX)"
 export LOGDIR CPUS MEM
 
@@ -63,6 +67,7 @@ else
   done < <(wc -l tests/test_*.py | sort -rn | awk '$2 ~ /test_/ {print $2}')
 fi
 
+echo "---- verify-fast: JOBS=$JOBS CPUS=$CPUS MEM=$MEM (nproc $NPROC) ----"
 start="$(date +%s)"
 printf '%s\n' "${FILES[@]}" | xargs -P "$JOBS" -I{} bash -c '
   f="{}"

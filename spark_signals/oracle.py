@@ -6,9 +6,14 @@ numerically identical results. Notes on cross-engine determinism:
 
 * Per-row arithmetic (CASE, +,-,*,/, sqrt, lag, last_value) is IEEE-754
   identical given identical inputs and ordering — left unrounded.
-* Multi-row aggregates (rolling AVG/STDDEV_POP, grouped SUM/AVG) may differ
-  in the last ulp across engines (summation-order differences); those output
-  columns are ROUNDed to 6 dp on BOTH sides at the query boundary.
+* The rolling features (fast/slow SMA, volatility) are built from exact
+  integer window sums of dp=5 mid micro-units (normalize.VOL_DP), squared
+  in HUGEINT, with one DOUBLE conversion and division at the end — the
+  same integers and the same IEEE operations as the Spark plan, so they
+  are bit-identical and the decisions that compare them need no grid.
+* Grouped SUM/AVG over doubles may differ in the last ulp across engines
+  (summation order); those output columns are ROUNDed on BOTH sides at the
+  query boundary.
 * All window orderings use (event_time, sequence) — deterministic under
   timestamp ties.
 * Decimal literals are CAST AS DOUBLE (DuckDB parses 1.0 as DECIMAL).
@@ -20,16 +25,29 @@ from __future__ import annotations
 
 from spark_signals.config import EngineConfig
 from spark_signals.pipeline.normalize import VOL_DP
-from spark_signals.pipeline.sma_cross import SPREAD_DECISION_DP
 
 ROUND_DP = 6
 
-# Grid scales interpolated from the SAME named constants the Spark
-# expressions use (normalize.VOL_DP, sma_cross.SPREAD_DECISION_DP) — a
-# hardcoded 1e5/1e9 here would silently desynchronize the two engines the
-# day a constant is bumped. "1eN" parses as DOUBLE in DuckDB.
+# Grid scale interpolated from the SAME named constant the Spark
+# expressions use (normalize.VOL_DP) — a hardcoded 1e5 here would silently
+# desynchronize the two engines the day it is bumped. "1eN" parses as
+# DOUBLE in DuckDB.
 _VOL_S = f"1e{VOL_DP}"
-_SPREAD_S = f"1e{SPREAD_DECISION_DP}"
+# the mid's exact dp=5 micro-unit (rounding.micro_units_sql)
+_U = f"CAST(floor(mid_price * {_VOL_S} + 0.5000001) AS BIGINT)"
+_TICK_ORDER = "PARTITION BY product_id ORDER BY event_time, sequence"
+
+
+def _frame(w: int) -> str:
+    return f"({_TICK_ORDER} ROWS BETWEEN {w - 1} PRECEDING AND CURRENT ROW)"
+
+
+def _sma(w: int) -> str:
+    """Σu / n / 10^VOL_DP over the last ``w`` rows (normalize._rolling_features)."""
+    return (
+        f"CAST(SUM({_U}) OVER {_frame(w)} AS DOUBLE)"
+        f" / CAST(COUNT(mid_price) OVER {_frame(w)} AS DOUBLE) / {_VOL_S}"
+    )
 
 
 def _fmt(x: float) -> str:
@@ -77,30 +95,22 @@ normalized_lag AS (
     FROM normalized_base
 ),
 normalized_vol AS (
-    -- exact BIGINT window sums of dp=5 mid micro-units: bit-identical
-    -- rolling variance on every engine (mirrors normalize.VOL_DP; native
-    -- STDDEV_POP's last ulp is accumulation-order-dependent)
+    -- exact window sums of dp=5 mid micro-units, squares in HUGEINT
+    -- (mirrors normalize._rolling_features)
     SELECT *,
-        SUM(CAST(floor(mid_price * {_VOL_S} + 0.5000001) AS BIGINT)) OVER w_vol AS _vol_m1,
-        SUM(CAST(floor(mid_price * {_VOL_S} + 0.5000001) AS BIGINT)
-            * CAST(floor(mid_price * {_VOL_S} + 0.5000001) AS BIGINT)) OVER w_vol AS _vol_m2,
+        SUM({_U}) OVER w_vol AS _vol_m1,
+        SUM(CAST({_U} AS HUGEINT) * CAST({_U} AS HUGEINT)) OVER w_vol AS _vol_m2,
         COUNT(mid_price) OVER w_vol AS _vol_n
     FROM normalized_lag
-    WINDOW w_vol AS (
-        PARTITION BY product_id ORDER BY event_time, sequence
-        ROWS BETWEEN {cfg.volatility_window - 1} PRECEDING AND CURRENT ROW
-    )
+    WINDOW w_vol AS {_frame(cfg.volatility_window)}
 ),
 normalized_prices AS (
     SELECT
         product_id, event_time, sequence, mid_price, best_bid, best_ask,
         CASE WHEN prev_mid_price IS NULL OR prev_mid_price = 0 THEN NULL
              ELSE (mid_price - prev_mid_price) / prev_mid_price END AS returns,
-        sqrt(greatest(
-            CAST(_vol_m2 AS DOUBLE) / CAST(_vol_n AS DOUBLE)
-            - (CAST(_vol_m1 AS DOUBLE) / CAST(_vol_n AS DOUBLE))
-              * (CAST(_vol_m1 AS DOUBLE) / CAST(_vol_n AS DOUBLE)),
-            0.0)) / {_VOL_S} AS volatility
+        sqrt(CAST(_vol_n * _vol_m2 - _vol_m1 * _vol_m1 AS DOUBLE)
+             / CAST(_vol_n * _vol_n AS DOUBLE)) / {_VOL_S} AS volatility
     FROM normalized_vol
 )"""
 
@@ -109,29 +119,14 @@ def signals_cte(cfg: EngineConfig) -> str:
     return f"""
 sma_enriched AS (
     SELECT
-        product_id, event_time, sequence, mid_price AS price,
-        AVG(mid_price) OVER (
-            PARTITION BY product_id ORDER BY event_time, sequence
-            ROWS BETWEEN {cfg.sma_fast_window - 1} PRECEDING AND CURRENT ROW
-        ) AS fast_sma,
-        AVG(mid_price) OVER (
-            PARTITION BY product_id ORDER BY event_time, sequence
-            ROWS BETWEEN {cfg.sma_slow_window - 1} PRECEDING AND CURRENT ROW
-        ) AS slow_sma
+        product_id, event_time, sequence, mid_price, volatility,
+        {_sma(cfg.sma_fast_window)} AS fast_sma,
+        {_sma(cfg.sma_slow_window)} AS slow_sma
     FROM normalized_prices
 ),
 sma_spread AS (
-    -- _spread_r: dp=9 decision grid (mirrors pipeline.sma_cross
-    -- SPREAD_DECISION_DP) so the crossover comparison cannot flip on the
-    -- window-AVG's summation-order ulp
     SELECT *, fast_sma - slow_sma AS spread,
-           floor((fast_sma - slow_sma) * {_SPREAD_S} + 0.5000001) / {_SPREAD_S} AS _spread_r,
-           LAG(fast_sma - slow_sma, {cfg.confirmation}) OVER (
-               PARTITION BY product_id ORDER BY event_time, sequence
-           ) AS prev_spread,
-           LAG(floor((fast_sma - slow_sma) * {_SPREAD_S} + 0.5000001) / {_SPREAD_S}, {cfg.confirmation}) OVER (
-               PARTITION BY product_id ORDER BY event_time, sequence
-           ) AS _prev_spread_r
+           LAG(fast_sma - slow_sma, {cfg.confirmation}) OVER ({_TICK_ORDER}) AS prev_spread
     FROM sma_enriched
 ),
 crossover_signals AS (
@@ -140,11 +135,11 @@ crossover_signals AS (
         product_id AS instrument_id,
         sequence,
         event_time AS signal_time,
-        CASE WHEN _spread_r > 0 AND _prev_spread_r <= 0 THEN 'LONG'
-             WHEN _spread_r < 0 AND _prev_spread_r >= 0 THEN 'SHORT'
+        CASE WHEN spread > 0 AND prev_spread <= 0 THEN 'LONG'
+             WHEN spread < 0 AND prev_spread >= 0 THEN 'SHORT'
              ELSE 'HOLD' END AS signal_type,
-        CASE WHEN _spread_r > 0 AND _prev_spread_r <= 0 THEN CAST(1.0 AS DOUBLE)
-             WHEN _spread_r < 0 AND _prev_spread_r >= 0 THEN CAST(-1.0 AS DOUBLE)
+        CASE WHEN spread > 0 AND prev_spread <= 0 THEN CAST(1.0 AS DOUBLE)
+             WHEN spread < 0 AND prev_spread >= 0 THEN CAST(-1.0 AS DOUBLE)
              ELSE CAST(0.0 AS DOUBLE) END AS position,
         ABS(spread) AS confidence,
         fast_sma, slow_sma, spread, prev_spread

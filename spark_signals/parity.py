@@ -67,7 +67,7 @@ SQL_TICKS = oracle.with_chain(CFG, upto="ticks") + "\nSELECT * FROM ticks"
 
 
 def q_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    norm = N.normalized_prices(_ticks(spark, sf_dir), CFG)
+    norm = N.enriched_ticks(_ticks(spark, sf_dir), CFG).select(*N.NORMALIZED_COLUMNS)
     return _round_cols(norm, {"volatility": DP})
 
 
@@ -154,8 +154,9 @@ FROM positions_stream"""
 
 def q_j1_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1 — the explicit left-join re-attachment form."""
-    norm = N.normalized_prices(_ticks(spark, sf_dir), CFG)
-    sig = S.crossover_signals(S.sma_enriched(norm, CFG), CFG)
+    enriched = N.enriched_ticks(_ticks(spark, sf_dir), CFG)
+    norm = enriched.select(*N.NORMALIZED_COLUMNS)
+    sig = S.crossover_signals_enriched(enriched, CFG)
     base = P.positions_base_join(norm, sig)
     return _round_cols(
         base.select(
@@ -514,27 +515,18 @@ def q_breakout_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _round_cols(dec, {"confidence": DP})
 
 
-_BK_UPPER = f"slow_sma + CAST(2.0 AS DOUBLE) * volatility"
-_BK_LOWER = f"slow_sma - CAST(2.0 AS DOUBLE) * volatility"
+_BK_UPPER = "slow_sma + CAST(2.0 AS DOUBLE) * volatility"
+_BK_LOWER = "slow_sma - CAST(2.0 AS DOUBLE) * volatility"
 
 SQL_BREAKOUT_SIGNALS = (
-    oracle.with_chain(CFG, upto="normalized")
+    oracle.with_chain(CFG, upto="signals")
     + f""",
-bk AS (
-  SELECT product_id, event_time, sequence, mid_price, volatility,
-    AVG(mid_price) OVER (PARTITION BY product_id ORDER BY event_time, sequence
-      ROWS BETWEEN {CFG.sma_slow_window - 1} PRECEDING AND CURRENT ROW) AS slow_sma
-  FROM normalized_prices
-),
 bks AS (
-  -- dp=9-gridded band differences (mirrors strategies.breakout)
   SELECT *,
-    CASE WHEN floor((mid_price - ({_BK_UPPER})) * 1e9 + 0.5000001) / 1e9 > 0
-              THEN CAST(1.0 AS DOUBLE)
-         WHEN floor((mid_price - ({_BK_LOWER})) * 1e9 + 0.5000001) / 1e9 < 0
-              THEN CAST(-1.0 AS DOUBLE)
+    CASE WHEN mid_price > {_BK_UPPER} THEN CAST(1.0 AS DOUBLE)
+         WHEN mid_price < {_BK_LOWER} THEN CAST(-1.0 AS DOUBLE)
          ELSE CAST(0.0 AS DOUBLE) END AS state
-  FROM bk
+  FROM sma_enriched
 ),
 bkl AS (
   SELECT *, LAG(state) OVER (PARTITION BY product_id ORDER BY event_time, sequence)

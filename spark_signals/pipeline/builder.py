@@ -99,10 +99,7 @@ def build_pipeline(ticks: DataFrame, cfg: EngineConfig | None = None) -> Pipelin
     # one shared window stage; every downstream branch is a projection off it
     # (forks reuse the exchange instead of recomputing the scan+sort)
     enriched = N.enriched_ticks(ticks, cfg)
-    norm = enriched.select(
-        "product_id", "event_time", "sequence", "mid_price",
-        "best_bid", "best_ask", "returns", "volatility",
-    )
+    norm = enriched.select(*N.NORMALIZED_COLUMNS)
     signals = S.crossover_signals_enriched(enriched, cfg)
     base = P.positions_base_inline(enriched, cfg)
     return assemble_outputs(norm, signals, base, cfg)

@@ -1,8 +1,9 @@
-"""Normalization stage — P1, P2, W1, W2.
+"""Normalization + rolling-feature stage — P1, P2, W1-W4.
 
-prices_raw → normalized_prices: typed projection, mid-price with bid/ask
-fallback, previous-tick lag, percent return with null/zero guard, rolling
-60-tick population-stddev volatility.
+prices_raw → enriched ticks: typed projection, mid-price with bid/ask
+fallback, previous-tick lag, percent return with null/zero guard, and the
+rolling features — 60-tick population-stddev volatility and the fast/slow
+SMAs — from one set of exact integer running sums.
 
 Reference semantics: sma_cross.py:57-105 (normalized_base / normalized_prices
 views). One deliberate strengthening: all window orderings add ``sequence`` as
@@ -56,16 +57,18 @@ def normalized_base(ticks: DataFrame) -> DataFrame:
     )
 
 
-# Volatility decision grid: mids are recovered as exact dp=5 integer
-# micro-units and the rolling variance is computed from BIGINT window sums
-# (Σu, Σu²) — exact int64 arithmetic on both engines, so the stddev is
-# bit-identical regardless of accumulation order. Native STDDEV_POP's
-# last ulp is order- and engine-dependent, which flipped a dp=9-rounded
-# volatility_ratio cell at sf0.1 (and would flip breakout band decisions).
-# Precondition: frame_rows · (max_mid · 10^dp)² < 2^63, i.e. at dp=5 over a
-# 60-row frame max_mid ≲ 3.9e3 (driver data tops out at ~560 — 7× margin;
-# a single u² already overflows int64 at mid ≈ 3e4). For larger quote
-# magnitudes re-derive dp: dp=3 allows mids to ~3.9e5.
+# Rolling-feature grid: mids are recovered as exact dp=5 integer
+# micro-units u, and every rolling feature (fast/slow SMA, volatility) is
+# derived from exact integer window sums (Σu, Σu², n) — the same integers
+# on every engine and in the streaming replay, so each feature is
+# bit-identical regardless of accumulation order, and decisions comparing
+# them (crossovers, band touches) need no decision grid.
+# Range: the dp=5 grid (1e-5 quote resolution) bounds the SMAs as well as
+# volatility — they are means of gridded mids. The running Σu is BIGINT
+# (rows per key · max_mid · 10^5 < 2^63: ~9.5e8 rows per key at $97k), a
+# window's Σu converts to DOUBLE exactly while w · max_mid · 10^5 < 2^53
+# (max_mid ≲ 1.5e9 over 60 rows), and squares are taken in DECIMAL(38,0),
+# so BTC-scale quotes are far inside every bound.
 VOL_DP = 5
 
 
@@ -80,80 +83,74 @@ def _rolling_features(over: str, cfg: EngineConfig):
     the three ``cum_exprs`` running-sum columns in a projection FIRST, then
     compute the features (which consume ``_c1/_c2/_cn``) and drop them.
 
-    **Why running sums + lag instead of bounded frames** (r16): Spark
+    **Running sums + lag instead of bounded frames** (r16): Spark
     re-evaluates a bounded sliding frame from scratch for every row —
-    O(rows x frame) aggregate updates; the 60-row volatility frame with
-    three aggregates was ~180 updates/row, the dominant CPU of the whole
-    window stage (measured: no skew, no fetch wait, pure executor run
-    time). An UNBOUNDED PRECEDING frame updates incrementally (O(1)/row),
-    and the 60-row frame sum is recovered exactly as cum(i) - cum(i-60)
-    via lag — the operands are exact integers, so the difference is
-    bit-identical to the frame sum (verified by value-hash at sf0.1 and by
-    the oracle; the volatility expression consumes the identical doubles).
-    enriched_ticks execute: 0.93 -> 0.66 s at sf0.1 on local[32].
+    O(rows x frame) aggregate updates. An UNBOUNDED PRECEDING frame updates
+    incrementally (O(1)/row), and a w-row window sum is recovered exactly
+    as cum(i) - cum(i-w) via lag — the operands are exact integers, so the
+    difference is the window sum to the bit. All three features read the
+    same running sums:
 
-    Overflow budget: the RUNNING sums are unbounded where the frame sums
-    were 60-row-bounded, so each accumulator is sized explicitly.
-    _c1 = Σu with u = mid·10^5 ≲ 5.6e7 at observed magnitudes -> BIGINT
-    holds ~1.6e11 rows per key; _cn ≤ rows per key. _c2 = Σu² with
-    u² ≲ 3.1e15 would overflow BIGINT at ~3e3 rows per key, so it
-    accumulates as DECIMAL(38,0) — exact, headroom ~3e22 rows per key, and
-    still O(1)/row. The recovered 60-row differences stay inside the
-    original micro_units precondition, and the final CAST AS DOUBLE is
-    exact (< 2^53), so values are unchanged to the bit.
+    * SMA over w rows = (Σu / n) / 10^VOL_DP — both operands exact in
+      DOUBLE, one IEEE division chain;
+    * volatility = sqrt((n·Σu² − (Σu)²) / n²) / 10^VOL_DP — the variance
+      numerator is formed exactly in DECIMAL(38,0), then converted once
+      (correctly rounded, as DuckDB's HUGEINT and Python's int are) and
+      divided once in DOUBLE.
 
-    Per-ROW product ceiling (r16 advisory): the u·u below multiplies in
-    BIGINT *before* the DECIMAL(38,0) cast — deliberately, because a
-    DECIMAL(19,0) operand would leave Spark's Long-backed Decimal fast
-    path (MAX_LONG_DIGITS=18) and put a BigDecimal multiply on the
-    hottest per-row path. That caps mid_price at ~3.0e4 at dp=5
-    (u² < 2^63 ⇔ u ≲ 3.04e9 ⇔ mid ≲ 3.04e4) — the same ceiling the
-    module-level VOL_DP note states for a single u², 54× above observed
-    data. Under Spark 4's default ANSI mode an excursion past it THROWS
-    (loud, not silent); re-derive VOL_DP before disabling ANSI or
-    ingesting quote magnitudes near 3e4.
+    Overflow budget: u is widened to DECIMAL(38,0) *before* squaring (u² at
+    $97k is ~9.4e19, past BIGINT), so _c2 = Σu² and the numerator are
+    exact at any quote magnitude the VOL_DP note admits. _c1 = Σu stays
+    BIGINT (see VOL_DP) and _cn counts rows per key.
     """
     from spark_signals.rounding import micro_units_sql
 
-    V = cfg.volatility_window
     u = micro_units_sql("mid_price", VOL_DP)
-    scale = float(10**VOL_DP)
+    wide_u = f"CAST({u} AS DECIMAL(38,0))"
+    scale = f"{float(10**VOL_DP)!r}D"
     unbounded = "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
     cum_exprs = [
         f"sum({u}) OVER ({over} {unbounded}) AS _c1",
-        f"sum(CAST(({u}) * ({u}) AS DECIMAL(38,0))) OVER ({over} {unbounded}) AS _c2",
+        f"sum({wide_u} * {wide_u}) OVER ({over} {unbounded}) AS _c2",
         f"count(mid_price) OVER ({over} {unbounded}) AS _cn",
     ]
+
+    def last(cum: str, w: int, zero: str = "0L") -> str:
+        """The sum over the last ``w`` rows of running-sum column ``cum``."""
+        return f"({cum} - COALESCE(lag({cum}, {w}) OVER ({over}), {zero}))"
+
+    def sma(w: int) -> str:
+        return (
+            f"CAST({last('_c1', w)} AS DOUBLE)"
+            f" / CAST({last('_cn', w)} AS DOUBLE) / {scale}"
+        )
+
     prev_mid = f"lag(mid_price) OVER ({over})"
     returns = (
         f"CASE WHEN (({prev_mid}) IS NULL) OR (({prev_mid}) = 0)"
         f" THEN CAST(NULL AS DOUBLE)"
         f" ELSE (mid_price - ({prev_mid})) / ({prev_mid}) END"
     )
-    m1 = f"CAST(_c1 - COALESCE(lag(_c1, {V}) OVER ({over}), 0L) AS DOUBLE)"
-    m2 = (
-        f"CAST(_c2 - COALESCE(lag(_c2, {V}) OVER ({over}),"
-        " CAST(0 AS DECIMAL(38,0))) AS DOUBLE)"
-    )
-    n = f"CAST(_cn - COALESCE(lag(_cn, {V}) OVER ({over}), 0L) AS DOUBLE)"
-    mean_u = f"(({m1}) / ({n}))"
-    var_u = f"(({m2}) / ({n}) - {mean_u} * {mean_u})"
-    volatility = f"SQRT(GREATEST({var_u}, 0.0D)) / {scale!r}D"
-    fast = (
-        f"avg(mid_price) OVER ({over} ROWS BETWEEN"
-        f" {cfg.sma_fast_window - 1} PRECEDING AND CURRENT ROW)"
-    )
-    slow = (
-        f"avg(mid_price) OVER ({over} ROWS BETWEEN"
-        f" {cfg.sma_slow_window - 1} PRECEDING AND CURRENT ROW)"
-    )
-    return cum_exprs, returns, volatility, fast, slow
+    V = cfg.volatility_window
+    n = last("_cn", V)
+    s1 = f"CAST({last('_c1', V)} AS DECIMAL(38,0))"
+    s2 = last("_c2", V, "CAST(0 AS DECIMAL(38,0))")
+    numerator = f"CAST({n} AS DECIMAL(38,0)) * {s2} - {s1} * {s1}"
+    volatility = f"SQRT(CAST({numerator} AS DOUBLE) / CAST({n} * {n} AS DOUBLE)) / {scale}"
+    return cum_exprs, returns, volatility, sma(cfg.sma_fast_window), sma(cfg.sma_slow_window)
+
+
+#: The prices_normalized sink's columns, projected off enriched_ticks.
+NORMALIZED_COLUMNS = (
+    "product_id", "event_time", "sequence", "mid_price",
+    "best_bid", "best_ask", "returns", "volatility",
+)
 
 
 def enriched_ticks(ticks: DataFrame, cfg: EngineConfig) -> DataFrame:
     """All per-tick window-derived columns in ONE window stage.
 
-    normalized_prices ∪ sma_enriched ∪ the crossover lag — every rolling
+    returns, volatility, both SMAs and the crossover lag — every rolling
     feature shares the same (partitionBy product_id, orderBy event_time,
     sequence) spec, so Catalyst plans a single shuffle + sort and stacks the
     Window operators on top. Downstream stages (signals, positions, metrics,
@@ -329,26 +326,3 @@ def enriched_ticks_auto(
     if choose_tick_plan(ticks, cfg, hot_key_rows) == "rekeyed":
         return enriched_ticks_rekeyed(ticks, cfg, bucket=bucket)
     return enriched_ticks(ticks, cfg)
-
-
-def normalized_prices(ticks: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """P2 + W1 + W2 — returns and rolling volatility
-    (reference: sma_cross.py:76-105)."""
-    base = normalized_base(ticks)
-    prev_mid = f"lag(mid_price) OVER ({TICK_OVER})"
-    vol_frame = (
-        f"{TICK_OVER} ROWS BETWEEN {cfg.volatility_window - 1} PRECEDING"
-        " AND CURRENT ROW"
-    )
-    return base.selectExpr(
-        "product_id",
-        "event_time",
-        "sequence",
-        "mid_price",
-        "best_bid",
-        "best_ask",
-        f"CASE WHEN (({prev_mid}) IS NULL) OR (({prev_mid}) = 0)"
-        f" THEN CAST(NULL AS DOUBLE)"
-        f" ELSE (mid_price - ({prev_mid})) / ({prev_mid}) END AS returns",
-        f"stddev_pop(mid_price) OVER ({vol_frame}) AS volatility",
-    )

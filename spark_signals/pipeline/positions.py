@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from spark_signals.config import EngineConfig
 from spark_signals.pipeline import jsonfmt as J
+from spark_signals.pipeline.sma_cross import crossover_case
 from spark_signals.rounding import sql_str_lit
 
 
@@ -40,17 +41,10 @@ def positions_base_inline(enriched: DataFrame, cfg: EngineConfig) -> DataFrame:
     signals (sma_cross.py:186-208) but reuses the shared window stage — no
     join, no second shuffle.
     """
-    from spark_signals.pipeline.sma_cross import SPREAD_DECISION_DP
-    from spark_signals.rounding import sround_sql
-
-    # same dp=9 decision grid as every other crossover implementation
-    # (sround∘lag ≡ lag∘sround, so this matches the join variant exactly).
     # SQL-text projection: one py4j round trip for the whole select instead
     # of dozens of Column calls (construction is 30-60% of pipeline-query
     # wall at sf0.1, r16) — parses to the identical Catalyst expressions,
     # pinned by tests/test_plan_equality.py.
-    spread_r = sround_sql("sig_spread", SPREAD_DECISION_DP)
-    prev_r = sround_sql("prev_sig_spread", SPREAD_DECISION_DP)
     return enriched.selectExpr(
         "product_id",
         "event_time",
@@ -63,9 +57,7 @@ def positions_base_inline(enriched: DataFrame, cfg: EngineConfig) -> DataFrame:
         "CASE WHEN (best_bid IS NOT NULL) AND (best_ask IS NOT NULL)"
         " THEN best_ask - best_bid END AS spread",
         # sparse: NULL unless a crossover fired (see module docstring)
-        f"CASE WHEN (({spread_r}) > 0) AND (({prev_r}) <= 0) THEN 1.0D"
-        f" WHEN (({spread_r}) < 0) AND (({prev_r}) >= 0) THEN -1.0D"
-        " END AS signal_position",
+        f"{crossover_case('1.0D', '-1.0D')} AS signal_position",
     )
 
 

@@ -1,14 +1,17 @@
-"""SMA-crossover strategy stage — W3, W4, W5, P3, P11.
+"""SMA-crossover strategy stage — W5, P3, P11.
 
-normalized_prices → sma_enriched → crossover_signals: fast/slow rolling
-means over trailing row frames, spread, confirmation-lagged spread for
-debounce, LONG/SHORT/HOLD classification, JSON metadata.
+enriched ticks → crossover signals: fast/slow SMAs and the
+confirmation-lagged spread come from the shared window stage
+(normalize.enriched_ticks); this stage classifies LONG/SHORT/HOLD and
+builds the JSON metadata.
 
 Reference semantics: sma_cross.py:127-184. Signal classification
 (sma_cross.py:155-164): LONG when spread crosses above zero relative to the
 spread ``confirmation`` ticks ago, SHORT on the inverse; |spread| is the
 confidence. The non-HOLD filter for the decisions sink is
-sma_cross.py:380-394.
+sma_cross.py:380-394. The SMAs are exact-integer means
+(normalize._rolling_features), identical on every engine, so the spread is
+compared raw.
 """
 
 from __future__ import annotations
@@ -18,103 +21,27 @@ from pyspark.sql import functions as F
 
 from spark_signals.config import EngineConfig
 from spark_signals.pipeline import jsonfmt as J
-from spark_signals.pipeline.normalize import tick_window
-from spark_signals.rounding import sql_str_lit, sround
+from spark_signals.rounding import sql_str_lit
 
-# decision-boundary grid: the crossover compares window-AVG outputs, whose
-# last ulp is summation-order-dependent — a raw `spread > 0` can flip
-# between engines (and between partitionings) exactly at a crossing, where
-# it matters. Both engines grid the spread at dp=9 before comparing, so a
-# flip would need a ~1e-9 cross-engine difference instead of 1 ulp.
-SPREAD_DECISION_DP = 9
+_LONG = "(sig_spread > 0) AND (prev_sig_spread <= 0)"
+_SHORT = "(sig_spread < 0) AND (prev_sig_spread >= 0)"
 
 
-def sma_enriched(norm: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """W3 + W4 — fast/slow trailing-row-frame SMAs (reference: sma_cross.py:127-146)."""
-    w = tick_window(cfg)
-    fast = F.avg("mid_price").over(w.rowsBetween(-(cfg.sma_fast_window - 1), 0))
-    slow = F.avg("mid_price").over(w.rowsBetween(-(cfg.sma_slow_window - 1), 0))
-    return norm.select(
-        "product_id",
-        "event_time",
-        "sequence",
-        F.col("mid_price").alias("price"),
-        fast.alias("fast_sma"),
-        slow.alias("slow_sma"),
-    )
+def crossover_case(long: str, short: str, hold: str | None = None) -> str:
+    """The debounced crossover as SQL text over ``sig_spread`` /
+    ``prev_sig_spread``: ``long`` on a LONG crossing, ``short`` on a SHORT
+    one, else ``hold`` (NULL when omitted)."""
+    other = f" ELSE {hold}" if hold is not None else ""
+    return f"CASE WHEN {_LONG} THEN {long} WHEN {_SHORT} THEN {short}{other} END"
 
 
-def crossover_signals(sma: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """W5 + P3 + P11 — debounced crossover classification
-    (reference: sma_cross.py:148-184)."""
-    w = tick_window(cfg)
-    spread = F.col("fast_sma") - F.col("slow_sma")
-    enriched = (
-        sma.withColumn("spread", spread)
-        .withColumn("_spread_r", sround(F.col("spread"), SPREAD_DECISION_DP))
-        .withColumn("prev_spread", F.lag("spread", cfg.confirmation).over(w))
-        .withColumn("_prev_spread_r", F.lag("_spread_r", cfg.confirmation).over(w))
-    )
-    long_cond = (F.col("_spread_r") > 0) & (F.col("_prev_spread_r") <= 0)
-    short_cond = (F.col("_spread_r") < 0) & (F.col("_prev_spread_r") >= 0)
-    signal_type = (
-        F.when(long_cond, F.lit("LONG")).when(short_cond, F.lit("SHORT")).otherwise(F.lit("HOLD"))
-    )
-    position = (
-        F.when(long_cond, F.lit(1.0)).when(short_cond, F.lit(-1.0)).otherwise(F.lit(0.0))
-    )
-    # JSON_OBJECT key order (reference: sma_cross.py:166-172) is preserved by
-    # struct field order inside to_json; numeric fields use the canonical
-    # fixed-precision serialization (jsonfmt) so the string is hash-gateable.
-    metadata = F.to_json(
-        F.struct(
-            J.fmt_fixed(F.col("fast_sma"), 6).alias("fast_sma"),
-            J.fmt_fixed(F.col("slow_sma"), 6).alias("slow_sma"),
-            J.fmt_fixed(F.col("spread"), 6).alias("spread"),
-            F.lit(str(cfg.confirmation)).alias("confirmation_window"),
-            F.lit(cfg.execution_mode).alias("execution_mode"),
-        )
-    )
-    return enriched.select(
-        F.lit(cfg.strategy_run_id).alias("strategy_run_id"),
-        F.col("product_id").alias("instrument_id"),
-        F.col("sequence"),
-        F.col("event_time").alias("signal_time"),
-        signal_type.alias("signal_type"),
-        position.alias("position"),
-        F.abs(F.col("spread")).alias("confidence"),
-        F.col("fast_sma"),
-        F.col("slow_sma"),
-        F.col("spread"),
-        F.col("prev_spread"),
-        metadata.alias("metadata"),
-    )
-
-
-def crossover_signals_enriched(enriched: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """crossover_signals as a pure projection off normalize.enriched_ticks
-    (sig_spread / prev_sig_spread already computed in the shared window
-    stage) — same output as ``crossover_signals``, zero extra shuffles.
-
-    The decision grids inline (sround∘lag ≡ lag∘sround, so gridding the
-    lagged raw spread here equals the join variant's lag of the gridded
-    spread bit-for-bit). SQL-text projection (one py4j round trip;
-    identical Catalyst expressions — tests/test_plan_equality.py)."""
-    from spark_signals.rounding import sround_sql
-
-    spread_r = sround_sql("sig_spread", SPREAD_DECISION_DP)
-    prev_r = sround_sql("prev_sig_spread", SPREAD_DECISION_DP)
-    long_cond = f"(({spread_r}) > 0) AND (({prev_r}) <= 0)"
-    short_cond = f"(({spread_r}) < 0) AND (({prev_r}) >= 0)"
-    signal_type = (
-        f"CASE WHEN {long_cond} THEN 'LONG'"
-        f" WHEN {short_cond} THEN 'SHORT' ELSE 'HOLD' END"
-    )
-    position = (
-        f"CASE WHEN {long_cond} THEN 1.0D"
-        f" WHEN {short_cond} THEN -1.0D ELSE 0.0D END"
-    )
-    metadata = (
+def signal_metadata_sql(cfg: EngineConfig) -> str:
+    """P11 JSON metadata as Spark-SQL text over ``fast_sma`` / ``slow_sma`` /
+    ``sig_spread``. JSON_OBJECT key order
+    (reference: sma_cross.py:166-172) is the struct field order; numeric
+    fields use the canonical fixed-precision serialization (jsonfmt) so the
+    string is hash-gateable. Shared by the batch and streaming sinks."""
+    return (
         "to_json(struct("
         f"{J.fmt_fixed_sqltext('fast_sma', 6)} AS fast_sma, "
         f"{J.fmt_fixed_sqltext('slow_sma', 6)} AS slow_sma, "
@@ -122,19 +49,30 @@ def crossover_signals_enriched(enriched: DataFrame, cfg: EngineConfig) -> DataFr
         f"{sql_str_lit(cfg.confirmation)} AS confirmation_window, "
         f"{sql_str_lit(cfg.execution_mode)} AS execution_mode))"
     )
+
+
+def crossover_signals_enriched(enriched: DataFrame, cfg: EngineConfig) -> DataFrame:
+    """W5 + P3 + P11 — debounced crossover classification as a pure
+    projection off normalize.enriched_ticks (sig_spread / prev_sig_spread
+    already computed in the shared window stage), zero extra shuffles
+    (reference: sma_cross.py:148-184).
+
+    SQL-text projection (one py4j round trip; identical Catalyst
+    expressions — tests/test_plan_equality.py)."""
+    signal_type = crossover_case("'LONG'", "'SHORT'", "'HOLD'")
     return enriched.selectExpr(
         f"{sql_str_lit(cfg.strategy_run_id)} AS strategy_run_id",
         "product_id AS instrument_id",
         "sequence",
         "event_time AS signal_time",
         f"{signal_type} AS signal_type",
-        f"{position} AS position",
+        f"{crossover_case('1.0D', '-1.0D', '0.0D')} AS position",
         "ABS(sig_spread) AS confidence",
         "fast_sma",
         "slow_sma",
         "sig_spread AS spread",
         "prev_sig_spread AS prev_spread",
-        f"{metadata} AS metadata",
+        f"{signal_metadata_sql(cfg)} AS metadata",
     )
 
 

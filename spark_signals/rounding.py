@@ -1,9 +1,10 @@
 """Cross-engine deterministic rounding primitives.
 
-Shared by the parity layer (output rounding), the pipeline stages
-(decision-boundary gridding), and the streaming replay (Python twin).
-Lives in its own module so pipeline code can use the grid without a
-circular import through spark_signals.parity.
+Shared by the parity layer (output rounding), the pipeline stages (the
+exact micro-unit grid of the rolling features, the latency and JSON
+metadata grids), and the streaming replay. Lives in its own module so
+pipeline code can use the grid without a circular import through
+spark_signals.parity.
 """
 
 from __future__ import annotations
@@ -69,8 +70,8 @@ def sql_str_lit(value) -> str:
 
 def sround_py(x: float, dp: int) -> float:
     """Python twin of :func:`sround` — the identical IEEE operation sequence
-    (multiply, add, floor, divide), so the streaming replay stays
-    bit-identical to the batch plan wherever both grid the same double."""
+    (multiply, add, floor, divide), so Python code that grids a double
+    gets the engines' value bit for bit."""
     scale = float(10**dp)
     return math.floor(x * scale + 0.5000001) / scale
 

@@ -33,18 +33,14 @@ K_BANDS = 2.0
 
 def band_signals(enriched: DataFrame, cfg: EngineConfig) -> DataFrame:
     """enriched_ticks → per-tick band state + sparse entry signal."""
-    from spark_signals.rounding import sround
-
     w = N.tick_window(cfg)
     upper = F.col("slow_sma") + F.lit(K_BANDS) * F.col("volatility")
     lower = F.col("slow_sma") - F.lit(K_BANDS) * F.col("volatility")
-    # band decisions compare the dp=9-gridded mid−band difference (same
-    # doctrine as sma_cross.SPREAD_DECISION_DP): slow_sma's window-AVG ulp
-    # is engine-dependent and a raw comparison can flip exactly at a band
-    # touch; the oracle and the streaming rule grid identically
+    # slow_sma and volatility are exact-integer features, identical on
+    # every engine, so the band touch is compared raw
     state = (
-        F.when(sround(F.col("mid_price") - upper, 9) > 0, F.lit(1.0))
-        .when(sround(F.col("mid_price") - lower, 9) < 0, F.lit(-1.0))
+        F.when(F.col("mid_price") > upper, F.lit(1.0))
+        .when(F.col("mid_price") < lower, F.lit(-1.0))
         .otherwise(F.lit(0.0))
     )
     df = (
@@ -73,10 +69,7 @@ def band_signals(enriched: DataFrame, cfg: EngineConfig) -> DataFrame:
 
 def build_pipeline(ticks: DataFrame, cfg: EngineConfig) -> PipelineOutputs:
     enriched = band_signals(N.enriched_ticks(ticks, cfg), cfg)
-    norm = enriched.select(
-        "product_id", "event_time", "sequence", "mid_price",
-        "best_bid", "best_ask", "returns", "volatility",
-    )
+    norm = enriched.select(*N.NORMALIZED_COLUMNS)
     quote_spread = F.when(
         F.col("best_bid").isNotNull() & F.col("best_ask").isNotNull(),
         F.col("best_ask") - F.col("best_bid"),

@@ -6,29 +6,31 @@ incrementally on an unbounded keyed stream (reference: sma_cross.py:89-143,
 DataFrames (SURVEY.md §7 "What's hard"). This module reproduces them with
 ``applyInPandasWithState``: per product key, the state carries
 
-  * a bounded deque of the last ``slow_window`` mid-prices (frame state for
-    the rolling SMAs and volatility — the Spark analog of Flink's 6h-TTL
-    keyed state, reference __main__.py:45),
-  * a deque of the last ``confirmation`` spreads (for the debounce lag),
+  * the exact dp=5 integer micro-units of the last ``max(slow_window,
+    volatility_window)`` mids (the Spark analog of Flink's 6h-TTL keyed
+    state, reference __main__.py:45),
+  * the signal rule's state (the trailing ``confirmation`` spreads for the
+    debounce lag),
   * the forward-fill position and previous position.
 
-**Bit-parity with batch:** each frame aggregate is recomputed per row by
-replaying Spark's own accumulator recurrences in ascending frame order —
-``Average`` (running double sum / count) and ``CentralMomentAgg`` (Welford:
-delta/deltaN/m2) — so the streaming output is IEEE-identical to the batch
-window plan and hash-matches the same DuckDB oracle. An O(1)-per-event
-running-sum variant would drift in the last ulp; exactness wins here, and
-O(slow_window)=O(60) per event is amortized-constant anyway.
+**Bit-parity with batch:** the batch plan derives every rolling feature
+from exact integer window sums (pipeline.normalize._rolling_features). The
+replay keeps the same sums — Σu over the fast and slow windows, Σu and Σu²
+over the volatility window — as O(1)-per-row running Python ints (add the
+entering unit, subtract the evicted one) and applies the same IEEE
+operation chain, so the streaming output is identical to the batch window
+plan and hash-matches the same DuckDB oracle at any quote magnitude.
 
-Scale: state is O(slow_window) doubles per instrument; throughput is bounded
-by instrument-key parallelism (thousands of keys ≫ executor slots at
-production scale) and Arrow batch transfer, not by Python per-row overhead —
-rows reach the processor in columnar batches.
+Scale: state is O(slow_window) integers per instrument; throughput is
+bounded by instrument-key parallelism (thousands of keys ≫ executor slots at
+production scale) and Arrow batch transfer — rows reach the processor in
+columnar batches.
 """
 
 from __future__ import annotations
 
 import math
+import warnings
 from collections.abc import Iterator
 from typing import Any
 
@@ -40,9 +42,20 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from spark_signals.config import EngineConfig
 from spark_signals.pipeline.normalize import VOL_DP as _VOL_DP
 
+# Every applyInPandasWithState micro-batch, pyspark's serializer pads its
+# output with an all-NA frame it builds itself and concatenates it, which
+# makes pandas emit this FutureWarning once per batch. The padding is not
+# ours to change, so the one message is ignored, from that module only.
+warnings.filterwarnings(
+    "ignore",
+    message="The behavior of DataFrame concatenation with empty or all-NA entries is deprecated",
+    category=FutureWarning,
+    module=r"pyspark\.sql\.pandas\.serializers\Z",
+)
+
 STATE_SCHEMA = T.StructType(
     [
-        T.StructField("mids", T.ArrayType(T.DoubleType()), True),
+        T.StructField("units", T.ArrayType(T.LongType()), True),
         T.StructField("spreads", T.ArrayType(T.DoubleType()), True),
         T.StructField("position", T.DoubleType(), True),
         T.StructField("has_prev_position", T.BooleanType(), True),
@@ -84,32 +97,6 @@ OUTPUT_SCHEMA = T.StructType(
 )
 
 
-def _running_avg(values: list[float]) -> float:
-    """Spark `Average` accumulator replay: ascending sum / count."""
-    s = 0.0
-    for v in values:
-        s += v
-    return s / len(values)
-
-
-def _stddev_pop(values: list[float]) -> float:
-    """Replay of the batch plan's exact-integer rolling stddev
-    (pipeline.normalize.VOL_DP): mids → BIGINT micro-units, exact integer
-    Σu/Σu², one deterministic IEEE division/sqrt chain — identical to the
-    Spark expression bit-for-bit, and order-independent (the previous
-    Welford replay had to mirror Spark's accumulation order). The scale is
-    derived from VOL_DP so a batch re-derivation can't silently decouple
-    the replay."""
-    scale = float(10**_VOL_DP)
-    us = [math.floor(v * scale + 0.5000001) for v in values]
-    n = float(len(us))
-    m1 = float(sum(us))
-    m2 = float(sum(u * u for u in us))
-    mean_u = m1 / n
-    var_u = m2 / n - mean_u * mean_u
-    return math.sqrt(var_u if var_u > 0.0 else 0.0) / scale
-
-
 FRESH_STATE: tuple = ([], [], 0.0, False, 0.0, False)
 
 
@@ -125,29 +112,20 @@ FRESH_STATE: tuple = ([], [], 0.0, False, 0.0, False)
 def sma_rule(cfg: EngineConfig):
     """Debounced SMA crossover (pipeline.sma_cross) — rule_state is the
     trailing ``confirmation`` spread deque (W5's lag)."""
-    from spark_signals.pipeline.sma_cross import SPREAD_DECISION_DP
-    from spark_signals.rounding import sround_py
-
     confirmation = cfg.confirmation
 
     def step(mid, fast_sma, slow_sma, volatility, rule_state):
-        sig_spread = fast_sma - slow_sma
-        # decisions compare the dp=9-gridded spread (the batch plan's
-        # _spread_r — sma_cross.SPREAD_DECISION_DP); rule_state carries the
-        # gridded values so the lagged comparison matches bit-for-bit
-        spread_r = sround_py(sig_spread, SPREAD_DECISION_DP)
+        spread = fast_sma - slow_sma
         prev_spread = rule_state[-confirmation] if len(rule_state) >= confirmation else None
-        rule_state = rule_state + [spread_r]
-        if len(rule_state) > confirmation:
-            rule_state = rule_state[-confirmation:]
+        rule_state = (rule_state + [spread])[-confirmation:]
         signal_type = "HOLD"
         signal_position = None
         if prev_spread is not None:
-            if spread_r > 0 and prev_spread <= 0:
+            if spread > 0 and prev_spread <= 0:
                 signal_type, signal_position = "LONG", 1.0
-            elif spread_r < 0 and prev_spread >= 0:
+            elif spread < 0 and prev_spread >= 0:
                 signal_type, signal_position = "SHORT", -1.0
-        return signal_type, signal_position, abs(sig_spread), rule_state
+        return signal_type, signal_position, abs(spread), rule_state
 
     return step
 
@@ -155,17 +133,12 @@ def sma_rule(cfg: EngineConfig):
 def breakout_rule(cfg: EngineConfig):
     """Bollinger-band breakout (strategies.breakout) — rule_state is the
     single previous band state [-1, 0, +1]."""
-    from spark_signals.rounding import sround_py
     from spark_signals.strategies.breakout import K_BANDS
 
     def step(mid, fast_sma, slow_sma, volatility, rule_state):
         upper = slow_sma + K_BANDS * volatility
         lower = slow_sma - K_BANDS * volatility
-        # dp=9-gridded band differences — matches strategies.breakout
-        state = (
-            1.0 if sround_py(mid - upper, 9) > 0
-            else (-1.0 if sround_py(mid - lower, 9) < 0 else 0.0)
-        )
+        state = 1.0 if mid > upper else (-1.0 if mid < lower else 0.0)
         prev = rule_state[0] if rule_state else 0.0
         entering = state != 0.0 and prev != state
         if entering:
@@ -231,27 +204,20 @@ def replay_batch(
     lat_hi = cfg.fill_latency_ms + cfg.fill_latency_jitter_ms
     lat_vol = float(cfg.fill_latency_volatility_ms)
 
-    mids, rule_state, position, has_prev_pos, prev_mid, has_prev_mid = state_tuple
-    mids = list(mids)
+    units, rule_state, position, has_prev_pos, prev_mid, has_prev_mid = state_tuple
+    # Python ints: a numpy int64 from the state row would overflow on u²
+    units = [int(u) for u in units]
     rule_state = list(rule_state)
     out_rows: list[dict] = []
 
-    # Incremental exact-integer volatility accumulators (r17, guide §4.2
-    # per-row work): _stddev_pop re-derived all vol_w micro-units and
-    # re-summed Σu/Σu² from scratch per row (~3·vol_w integer ops/row, the
-    # loop's dominant cost at 60-row frames). The micro-units are exact
-    # integers and Python ints never overflow, so maintaining the window's
-    # Σu/Σu² incrementally (add the entering unit, subtract the evicted
-    # one) is associativity-exact: m1/m2 below are the same integers
-    # _stddev_pop summed, and the float division/sqrt chain is unchanged —
-    # bit-identical output (pinned by the streaming==batch parity tests).
-    # The FP frame averages (fast/slow SMA) stay per-row ascending loops:
-    # float addition is order-sensitive, so they cannot be restructured
-    # without changing values (same refusal as the batch plan's).
+    # Exact window sums, updated in O(1) per row: the batch plan's Σu over
+    # the fast and slow windows and Σu / Σu² over the volatility window
+    # (pipeline.normalize._rolling_features), as unbounded Python ints.
     scale = float(10**_VOL_DP)
-    us = [math.floor(v * scale + 0.5000001) for v in mids[-vol_w:]]
-    s1 = sum(us)
-    s2 = sum(u * u for u in us)
+    fast_sum = sum(units[-fast:])
+    slow_sum = sum(units[-slow:])
+    vol_sum = sum(units[-vol_w:])
+    vol_sq = sum(u * u for u in units[-vol_w:])
 
     for row in batch.itertuples(index=False):
         bid = None if pd.isna(row.best_bid) else float(row.best_bid)
@@ -263,23 +229,32 @@ def replay_batch(
         if has_prev_mid and prev_mid != 0:
             returns = (mid - prev_mid) / prev_mid
 
-        mids.append(mid)
-        if len(mids) > keep:
-            mids = mids[-keep:]
+        # evict the unit each window drops, then add the entering one
         u = math.floor(mid * scale + 0.5000001)
-        if len(us) == vol_w:
-            old = us.pop(0)
-            s1 -= old
-            s2 -= old * old
-        us.append(u)
-        s1 += u
-        s2 += u * u
-        n_u = float(len(us))
-        mean_u = float(s1) / n_u
-        var_u = float(s2) / n_u - mean_u * mean_u
-        volatility = math.sqrt(var_u if var_u > 0.0 else 0.0) / scale
-        fast_sma = _running_avg(mids[-fast:])
-        slow_sma = _running_avg(mids[-slow:])
+        seen = len(units)
+        if seen >= fast:
+            fast_sum -= units[-fast]
+        if seen >= slow:
+            slow_sum -= units[-slow]
+        if seen >= vol_w:
+            old = units[-vol_w]
+            vol_sum -= old
+            vol_sq -= old * old
+        units.append(u)
+        if seen == keep:
+            del units[0]
+        fast_sum += u
+        slow_sum += u
+        vol_sum += u
+        vol_sq += u * u
+
+        # the batch plan's IEEE chain: one exact int → DOUBLE conversion per
+        # operand, then the divisions (float() explicitly — int / int in
+        # Python rounds the exact quotient, not the converted operands)
+        fast_sma = float(fast_sum) / float(min(seen + 1, fast)) / scale
+        slow_sma = float(slow_sum) / float(min(seen + 1, slow)) / scale
+        n = min(seen + 1, vol_w)
+        volatility = math.sqrt(float(n * vol_sq - vol_sum * vol_sum) / float(n * n)) / scale
 
         signal_type, signal_position, confidence, rule_state = rule(
             mid, fast_sma, slow_sma, volatility, rule_state
@@ -331,7 +306,7 @@ def replay_batch(
         prev_mid, has_prev_mid = mid, True
         has_prev_pos = True
 
-    return out_rows, (mids, rule_state, position, has_prev_pos, prev_mid, has_prev_mid)
+    return out_rows, (units, rule_state, position, has_prev_pos, prev_mid, has_prev_mid)
 
 
 def rows_to_frame(out_rows: list[dict]) -> pd.DataFrame:

@@ -21,7 +21,10 @@ from pyspark.sql import functions as F
 
 from spark_signals.config import EngineConfig
 from spark_signals.io.sources import PRICES_RAW_SCHEMA, ensure_session_confs
-from spark_signals.rounding import micro_units
+from spark_signals.pipeline import normalize as N
+from spark_signals.pipeline import positions as P
+from spark_signals.pipeline import sma_cross as S
+from spark_signals.rounding import micro_units, sql_str_lit
 from spark_signals.streaming.features import stateful_features
 
 
@@ -185,8 +188,6 @@ def multi_sink_writer(
     """
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from spark_signals.pipeline import positions as P
-
         batch_df.persist()
         try:
             # the feature stream is positions_costs-shaped, so the batch sink
@@ -194,37 +195,22 @@ def multi_sink_writer(
             # the SAME schema to the shared sink names, INCLUDING the P11
             # JSON metadata on signals_decisions: the feature stream
             # surfaces fast_sma/slow_sma (OUTPUT_SCHEMA) and the metadata is
-            # built with the same jsonfmt canonicalizer and field order as
-            # the batch sink (sma_cross.crossover_signals / reference
-            # sma_cross.py:166-172 via __main__.py:97-115), so a consumer
-            # diffing the two sink schemas sees no gap.
-            from spark_signals.pipeline import jsonfmt as J
-
-            sig_spread = F.col("fast_sma") - F.col("slow_sma")
-            sig_metadata = F.to_json(
-                F.struct(
-                    J.fmt_fixed(F.col("fast_sma"), 6).alias("fast_sma"),
-                    J.fmt_fixed(F.col("slow_sma"), 6).alias("slow_sma"),
-                    J.fmt_fixed(sig_spread, 6).alias("spread"),
-                    F.lit(str(cfg.confirmation)).alias("confirmation_window"),
-                    F.lit(cfg.execution_mode).alias("execution_mode"),
-                )
-            )
+            # the batch sink's own SQL text (sma_cross.signal_metadata_sql),
+            # so a consumer diffing the two sink schemas sees no gap.
             sinks = {
-                "prices_normalized": batch_df.select(
-                    "product_id", "event_time", "sequence", "mid_price",
-                    "best_bid", "best_ask", "returns", "volatility",
-                ),
+                "prices_normalized": batch_df.select(*N.NORMALIZED_COLUMNS),
                 "signals_decisions": batch_df.filter(
-                    (F.col("signal_type") != "HOLD")
-                ).select(
-                    F.lit(cfg.strategy_run_id).alias("strategy_run_id"),
-                    F.col("product_id").alias("instrument_id"),
-                    F.col("event_time").alias("signal_time"),
+                    F.col("signal_type") != "HOLD"
+                ).selectExpr(
+                    "*", "fast_sma - slow_sma AS sig_spread"
+                ).selectExpr(
+                    f"{sql_str_lit(cfg.strategy_run_id)} AS strategy_run_id",
+                    "product_id AS instrument_id",
+                    "event_time AS signal_time",
                     "signal_type",
-                    F.col("position"),
+                    "position",
                     "confidence",
-                    sig_metadata.alias("metadata"),
+                    f"{S.signal_metadata_sql(cfg)} AS metadata",
                 ),
                 "strategy_executions": P.executions(batch_df, cfg),
                 "strategy_positions": P.position_transitions(batch_df, cfg),

@@ -1,11 +1,11 @@
 """Rolling features on Spark 4's ``transformWithStateInPandas`` — T4, modern API.
 
-Same semantics as :mod:`spark_signals.streaming.features` (Flink streaming
-OVER-aggregates: ``LAG`` / rows-frame ``AVG`` / ``STDDEV_POP`` /
-ignore-nulls ``LAST_VALUE`` forward-fill — reference sma_cross.py:89-143,
-223-230), re-expressed with the ``StatefulProcessor`` API that replaced
-``applyInPandasWithState`` as Spark's arbitrary-stateful-operator surface
-(SPARK-49564, Spark 4.0+).
+Same semantics as :mod:`spark_signals.streaming.features` (the reference's
+Flink streaming OVER-aggregates — ``LAG``, the SMAs and 60-tick volatility,
+ignore-nulls ``LAST_VALUE`` forward-fill, reference sma_cross.py:89-143,
+223-230 — replayed from exact integer running sums), re-expressed with the
+``StatefulProcessor`` API that replaced ``applyInPandasWithState`` as
+Spark's arbitrary-stateful-operator surface (SPARK-49564, Spark 4.0+).
 
 Why carry both implementations:
 
@@ -21,10 +21,11 @@ Both operators share :func:`spark_signals.streaming.features.replay_batch`,
 so their outputs are bit-identical to each other and to the batch window
 plan (the streaming-vs-batch parity tests cover both).
 
-Scale: identical state shape to the old operator — O(slow_window) doubles
-per instrument key, partitioned by key hash across executors. TTL (processing
--time based, as in Flink) caps total state at (active instruments within
-TTL) × O(60) doubles regardless of total historical key cardinality.
+Scale: identical state shape to the old operator — O(slow_window) integer
+micro-units per instrument key, partitioned by key hash across executors.
+TTL (processing-time based, as in Flink) caps total state at (active
+instruments within TTL) × O(60) integers regardless of total historical key
+cardinality.
 """
 
 from __future__ import annotations
@@ -54,7 +55,7 @@ from spark_signals.streaming.features import (
 class RollingFeatureProcessor(StatefulProcessor):
     """Per-instrument rolling-feature state machine.
 
-    State: one ValueState row (STATE_SCHEMA) holding the mid-price frame
+    State: one ValueState row (STATE_SCHEMA) holding the mid micro-unit
     deque, spread-debounce deque, and forward-fill position — exactly the
     tuple ``applyInPandasWithState`` keeps, so checkpointed semantics match.
     """

@@ -120,38 +120,38 @@ def test_enriched_ticks_sqltext_matches_column_witness(spark):
     # Column-DSL witness of the same running-sum + lag-difference features
     w = Window.partitionBy("product_id").orderBy("event_time", "sequence")
     wcum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    dec = T.DecimalType(38, 0)
     u = micro_units(F.col("mid_price"), VOL_DP)
     scale = float(10**VOL_DP)
     col_df = base.select(
         "*",
         F.sum(u).over(wcum).alias("_c1"),
-        F.sum((u * u).cast(T.DecimalType(38, 0))).over(wcum).alias("_c2"),
+        F.sum(u.cast(dec) * u.cast(dec)).over(wcum).alias("_c2"),
         F.count("mid_price").over(wcum).alias("_cn"),
     )
+    zero = F.lit(0).cast("long")
+
+    def last(c, rows, z=zero):
+        return F.col(c) - F.coalesce(F.lag(c, rows).over(w), z)
+
+    def sma(rows):
+        return last("_c1", rows).cast("double") / last("_cn", rows).cast("double") / F.lit(scale)
+
     prev = F.lag("mid_price").over(w)
-    m1 = (F.col("_c1") - F.coalesce(F.lag("_c1", cfg.volatility_window).over(w), F.lit(0).cast("long"))).cast("double")
-    m2 = (
-        F.col("_c2")
-        - F.coalesce(
-            F.lag("_c2", cfg.volatility_window).over(w),
-            F.lit(0).cast(T.DecimalType(38, 0)),
-        )
-    ).cast("double")
-    n = (F.col("_cn") - F.coalesce(F.lag("_cn", cfg.volatility_window).over(w), F.lit(0).cast("long"))).cast("double")
-    mean_u = m1 / n
-    var_u = m2 / n - mean_u * mean_u
+    n = last("_cn", cfg.volatility_window)
+    s1 = last("_c1", cfg.volatility_window).cast(dec)
+    s2 = last("_c2", cfg.volatility_window, F.lit(0).cast(dec))
+    numerator = n.cast(dec) * s2 - s1 * s1
     col_df = col_df.select(
         "product_id",
         F.when(prev.isNull() | (prev == 0), F.lit(None).cast("double"))
         .otherwise((F.col("mid_price") - prev) / prev)
         .alias("returns"),
-        (F.sqrt(F.greatest(var_u, F.lit(0.0))) / F.lit(scale)).alias("volatility"),
-        F.avg("mid_price")
-        .over(w.rowsBetween(-(cfg.sma_fast_window - 1), Window.currentRow))
-        .alias("fast_sma"),
-        F.avg("mid_price")
-        .over(w.rowsBetween(-(cfg.sma_slow_window - 1), Window.currentRow))
-        .alias("slow_sma"),
+        (F.sqrt(numerator.cast("double") / (n * n).cast("double")) / F.lit(scale)).alias(
+            "volatility"
+        ),
+        sma(cfg.sma_fast_window).alias("fast_sma"),
+        sma(cfg.sma_slow_window).alias("slow_sma"),
     )
     assert _canon(sql_df) == _canon(col_df)
 

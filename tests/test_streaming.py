@@ -455,3 +455,40 @@ def test_zone_registry_delta_per_microbatch(spark, tmp_path):
     got2 = read_pruned_registered(spark, table, reg, ranges)
     assert got2.count() == 1000
     assert all("_batch_id=1" in f for f in got2.inputFiles())
+
+
+def test_serializer_concat_warning_is_filtered_only_there():
+    """pyspark's applyInPandasWithState serializer makes pandas emit one
+    concatenation FutureWarning per micro-batch. Importing the feature
+    module silences exactly that message from exactly that module; every
+    other FutureWarning still gets through. Runs in a fresh interpreter:
+    pytest discards filters installed while it collects (imports) tests."""
+    import subprocess
+    import sys
+
+    probe = """
+import warnings
+import spark_signals.streaming.features
+concat = ("The behavior of DataFrame concatenation with empty or all-NA entries is"
+          " deprecated. In a future version, this will no longer exclude empty or"
+          " all-NA columns when determining the result dtype.")
+serializers = "pyspark.sql.pandas.serializers"
+with warnings.catch_warnings(record=True) as caught:
+    # show anything the module's filter does not match
+    warnings.filterwarnings("always", category=FutureWarning, append=True)
+    warnings.warn_explicit(concat, FutureWarning, "serializers.py", 1696, serializers)
+    warnings.warn_explicit(concat, FutureWarning, "frame.py", 1, "spark_signals.other")
+    warnings.warn_explicit("Another change", FutureWarning, "serializers.py", 1, serializers)
+    warnings.warn_explicit(concat, FutureWarning, "x.py", 1, serializers + ".sub")
+print([(str(w.message)[:15], w.filename) for w in caught])
+"""
+    out = subprocess.run(
+        [sys.executable, "-c", probe], capture_output=True, text=True, check=True
+    ).stdout
+    assert out.strip() == repr(
+        [
+            ("The behavior of", "frame.py"),
+            ("Another change", "serializers.py"),
+            ("The behavior of", "x.py"),
+        ]
+    )
