@@ -15,7 +15,9 @@ from __future__ import annotations
 
 import os
 import shutil
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -40,31 +42,46 @@ def write_sinks(
 ) -> dict[str, str]:
     """Batch multi-sink fan-out with shared-prefix reuse.
 
-    persist_for_fanout pins positions_costs so the five sink writes compute
-    the window stages once (the reference StatementSet merge, SURVEY.md §4).
-    Each table is written date-partitioned; at 100 TB this is what makes
-    retention (partition delete) and time-ranged reads (partition pruning)
-    O(touched days), not O(history).
+    persist_for_fanout pins the window stage and positions_costs, so the six
+    sink writes compute the window stages once (the reference StatementSet
+    merge, SURVEY.md §4). Each write is a small job whose cost is mostly
+    fixed per job, so the six run concurrently, one pool thread per sink;
+    a sink's JDBC append follows its own parquet write in the same thread.
+    The pins are released once every write has returned, and the first
+    failure (in sink order) is re-raised. Each table is written
+    date-partitioned; at 100 TB this is what makes retention (partition
+    delete) and time-ranged reads (partition pruning) O(touched days), not
+    O(history).
     """
+    sinks = outputs.sinks()
+    paths = {name: os.path.join(root, name) for name in sinks}
+
+    def write(name: str, df: DataFrame) -> None:
+        out = df.withColumn("event_date", F.to_date(F.col(SINK_TIME_COLUMNS[name])))
+        out.write.mode("overwrite").partitionBy("event_date").parquet(paths[name])
+        if jdbc_url is not None:
+            # buffered JDBC append (S5-S7): batchsize = the reference's
+            # sink.buffer-flush.max-rows. Exercised end-to-end against
+            # an embedded Derby database (bundled with Spark) in
+            # tests/test_jdbc_sink.py; a Postgres URL drops in unchanged.
+            df.write.format("jdbc").option("url", jdbc_url).option(
+                "dbtable", name
+            ).option("batchsize", jdbc_batchsize).mode("append").save()
+
+    # carries the caller's local properties (job group, scheduler pool)
+    # and session tags into each write's thread
+    target = inheritable_thread_target(outputs.window_stage.sparkSession)(write)
     persist_for_fanout(outputs)
-    paths: dict[str, str] = {}
     try:
-        for name, df in outputs.sinks().items():
-            tcol = SINK_TIME_COLUMNS[name]
-            out = df.withColumn("event_date", F.to_date(F.col(tcol)))
-            path = os.path.join(root, name)
-            out.write.mode("overwrite").partitionBy("event_date").parquet(path)
-            paths[name] = path
-            if jdbc_url is not None:
-                # buffered JDBC append (S5-S7): batchsize = the reference's
-                # sink.buffer-flush.max-rows. Exercised end-to-end against
-                # an embedded Derby database (bundled with Spark) in
-                # tests/test_jdbc_sink.py; a Postgres URL drops in unchanged.
-                df.write.format("jdbc").option("url", jdbc_url).option(
-                    "dbtable", name
-                ).option("batchsize", jdbc_batchsize).mode("append").save()
+        with ThreadPoolExecutor(max_workers=len(sinks)) as pool:
+            futures = [pool.submit(target, name, df) for name, df in sinks.items()]
+        for future in futures:
+            future.result()
     finally:
+        # dependent pin first: releasing the window stage while the
+        # positions_costs pin is unbuilt would re-plan that pin
         outputs.positions_costs.unpersist()
+        outputs.window_stage.unpersist()
     return paths
 
 

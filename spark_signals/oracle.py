@@ -154,11 +154,9 @@ def positions_cte(cfg: EngineConfig) -> str:
         f"{_fmt(cfg.slippage_volatility_multiplier)} + spread_ratio * "
         f"{_fmt(cfg.slippage_spread_multiplier)}"
     )
-    # inner dp=6 grid before the floor: the raw product sits 1 ulp apart
-    # across engines and can straddle an integer (424.999... vs 425.000...)
     lat_raw = (
-        f"{cfg.fill_latency_ms} + CAST(floor(floor({_fmt(float(cfg.fill_latency_volatility_ms))}"
-        f" * volatility_ratio * 1e6 + 0.5000001) / 1e6) AS BIGINT)"
+        f"{cfg.fill_latency_ms} + CAST(floor({_fmt(float(cfg.fill_latency_volatility_ms))}"
+        f" * volatility_ratio) AS BIGINT)"
     )
     return f"""
 positions_base AS (

@@ -299,9 +299,10 @@ def _metrics_chain(spark: SparkSession, sf_dir: str, *, fused: bool = False):
     sparse signal marker, performance_windows counts it in the SAME tumbling
     aggregate, and the returned ``counts`` is None (metrics_enriched skips
     the window-to-window join). Identical relation, one base scan instead of
-    two. The default join form stays as the J2 witness via
-    pipeline.build_pipeline and the q_performance_windows / q_signal_counts
-    extended queries (q_metrics switched to the fused form in r16)."""
+    two; pipeline.build_pipeline uses the fused form too. The default join
+    form is the J2 witness: the q_performance_windows / q_signal_counts
+    extended queries and tests/test_plans.py
+    test_metrics_dag_bounded_shuffles build it from here."""
     enriched = N.enriched_ticks(_ticks(spark, sf_dir), CFG)
     base = P.positions_base_inline(enriched, CFG)
     stream = P.positions_stream(base, CFG, keep_signal_marker=fused)
@@ -384,7 +385,7 @@ def q_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scan + one window chain instead of two of each plus the J2 join.
     # Identical relation (the unchanged SQL_METRICS oracle proves it, as it
     # already did for q_hourly_rollup); the join form stays exercised as the
-    # J2 witness via pipeline.build_pipeline (tests/test_plans.py
+    # J2 witness via _metrics_chain's default (tests/test_plans.py
     # test_metrics_dag_bounded_shuffles) and the q_performance_windows /
     # q_signal_counts extended queries.
     perf, counts = _metrics_chain(spark, sf_dir, fused=True)

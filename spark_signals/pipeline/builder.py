@@ -8,9 +8,14 @@ may come from ``spark.read`` (backtest/correctness) or ``spark.readStream``
 spark_signals.streaming.
 
 Multi-sink plan reuse (SURVEY.md §4): the reference's StatementSet merges its
-5 INSERTs into one job sharing the upstream subgraph. Spark re-plans per
-action, so ``persist_for_fanout`` pins the shared prefix (positions_costs)
-before fanning out to multiple writes.
+sink INSERTs into one job sharing the upstream subgraph. Spark re-plans per
+action, so ``persist_for_fanout`` pins the two relations every sink forks
+from — the strategy's window stage and ``positions_costs`` — and the six
+sink writes read only those pins: the ticks are scanned, shuffled and run
+through the rolling-feature windows once per backtest. The metrics chain
+is the fused single-scan form: the sparse signal marker rides the
+positions chain into A1's tumbling aggregate, so A2's signal count needs
+no second pass over the signals and no J2 join.
 """
 
 from __future__ import annotations
@@ -30,6 +35,7 @@ from spark_signals.pipeline import sma_cross as S
 
 @dataclass
 class PipelineOutputs:
+    window_stage: DataFrame
     normalized_prices: DataFrame
     crossover_signals: DataFrame
     signals_decisions: DataFrame
@@ -37,8 +43,6 @@ class PipelineOutputs:
     executions: DataFrame
     position_transitions: DataFrame
     position_returns: DataFrame
-    performance_windows: DataFrame
-    signal_counts: DataFrame
     metrics: DataFrame
     hourly_rollup: DataFrame
 
@@ -56,41 +60,40 @@ class PipelineOutputs:
 
 
 def assemble_outputs(
-    norm: DataFrame, signals: DataFrame, base: DataFrame, cfg: EngineConfig
+    window: DataFrame, signals: DataFrame, base: DataFrame, cfg: EngineConfig
 ) -> PipelineOutputs:
     """Shared downstream machinery: forward-fill → cost model → executions/
     transitions → tumbling metrics → rollup.
 
+    ``window`` is the strategy's window-stage relation (the
+    normalize.enriched_ticks columns plus any the strategy adds); the
+    prices_normalized projection, ``signals`` and ``base`` all fork from it.
     ``base`` is a positions_base-shaped DataFrame (normalized columns +
     sparse ``signal_position``); ``signals`` the strategy's signal stream
     (crossover_signals schema). Custom strategies (e.g. the pandas-UDF EWMA
     strategy) supply their own signal stage and reuse everything below it.
     """
-    stream = P.positions_stream(base, cfg)
-    enriched_pos = P.positions_enriched(stream, cfg)
-    costs = P.positions_costs(enriched_pos, cfg)
+    # the metrics chain keeps the sparse signal marker (non-null exactly on
+    # non-HOLD signal rows), so A2's count fuses into A1's aggregate;
+    # the sink-facing positions_costs drops it to keep the reference schema
+    stream = P.positions_stream(base, cfg, keep_signal_marker=True)
+    marked = P.positions_costs(P.positions_enriched(stream, cfg), cfg)
+    costs = marked.drop(P.SIGNAL_MARKER)
 
-    execs = P.executions(costs, cfg)
-    transitions = P.position_transitions(costs, cfg)
-
-    returns = M.position_returns(costs, cfg)
-    perf = M.performance_windows(returns, cfg)
-    counts = M.signal_counts(signals, cfg)
-    metr = M.metrics_enriched(perf, counts, cfg)
-    roll = R.hourly_rollup(metr, cfg)
+    returns = M.position_returns(marked, cfg)
+    metr = M.metrics_enriched(M.performance_windows(returns, cfg), None, cfg)
 
     return PipelineOutputs(
-        normalized_prices=norm,
+        window_stage=window,
+        normalized_prices=window.select(*N.NORMALIZED_COLUMNS),
         crossover_signals=signals,
         signals_decisions=S.signals_decisions(signals),
         positions_costs=costs,
-        executions=execs,
-        position_transitions=transitions,
+        executions=P.executions(costs, cfg),
+        position_transitions=P.position_transitions(costs, cfg),
         position_returns=returns,
-        performance_windows=perf,
-        signal_counts=counts,
         metrics=metr,
-        hourly_rollup=roll,
+        hourly_rollup=R.hourly_rollup(metr, cfg),
     )
 
 
@@ -99,18 +102,22 @@ def build_pipeline(ticks: DataFrame, cfg: EngineConfig | None = None) -> Pipelin
     # one shared window stage; every downstream branch is a projection off it
     # (forks reuse the exchange instead of recomputing the scan+sort)
     enriched = N.enriched_ticks(ticks, cfg)
-    norm = enriched.select(*N.NORMALIZED_COLUMNS)
     signals = S.crossover_signals_enriched(enriched, cfg)
     base = P.positions_base_inline(enriched, cfg)
-    return assemble_outputs(norm, signals, base, cfg)
+    return assemble_outputs(enriched, signals, base, cfg)
 
 
 def persist_for_fanout(outputs: PipelineOutputs) -> PipelineOutputs:
-    """Pin the shared subplan before multi-sink fan-out (batch mode).
+    """Pin the shared subplans before multi-sink fan-out (batch mode).
 
-    positions_costs is the widest shared prefix: executions, transitions,
-    and all metrics derive from it. Persisting it makes the 5-sink fan-out
-    compute the window stages once, like the reference's single merged job.
+    The window stage is pinned first, so the ``positions_costs`` pin reads
+    it rather than the ticks: prices_normalized and signals_decisions
+    project off the window stage, executions and transitions off
+    positions_costs, and the marker-bearing metrics chain re-runs only the
+    two position windows (forward-fill, previous position) over the pinned
+    stage. No sink plan then scans the ticks — the rolling-feature stage
+    runs once, like the reference's single merged job.
     """
+    outputs.window_stage.persist(StorageLevel.MEMORY_AND_DISK)
     outputs.positions_costs.persist(StorageLevel.MEMORY_AND_DISK)
     return outputs

@@ -164,8 +164,6 @@ def positions_costs(enriched: DataFrame, cfg: EngineConfig) -> DataFrame:
     All cost knobs fold into the plan as literals (Catalyst constant-folds the
     clamp bounds), exactly as the reference interpolates config into SQL text.
     """
-    from spark_signals.rounding import sround_sql
-
     slip_raw = (
         f"{cfg.slippage_rate!r}D"
         f" + volatility_ratio * {cfg.slippage_volatility_multiplier!r}D"
@@ -180,16 +178,11 @@ def positions_costs(enriched: DataFrame, cfg: EngineConfig) -> DataFrame:
     )
     # latency increment truncates toward zero (Flink CAST DOUBLE→BIGINT;
     # volatility_ratio ≥ 0 so floor ≡ trunc), then clamps to
-    # [base, base + jitter] (sma_cross.py:276-288). The product is gridded
-    # at dp=6 before the floor: its raw last ulp is engine-dependent and can
-    # straddle an integer (observed 424 vs 425 at sf0.1) — the oracle grids
-    # identically.
+    # [base, base + jitter] (sma_cross.py:276-288). volatility is exact on
+    # every engine, so the product is floored raw.
     lat_inc = (
-        "CAST(FLOOR("
-        + sround_sql(
-            f"{float(cfg.fill_latency_volatility_ms)!r}D * volatility_ratio", 6
-        )
-        + ") AS BIGINT)"
+        f"CAST(FLOOR({float(cfg.fill_latency_volatility_ms)!r}D * volatility_ratio)"
+        " AS BIGINT)"
     )
     lat_raw = f"{cfg.fill_latency_ms} + ({lat_inc})"
     lat_hi = cfg.fill_latency_ms + cfg.fill_latency_jitter_ms

@@ -69,7 +69,6 @@ def band_signals(enriched: DataFrame, cfg: EngineConfig) -> DataFrame:
 
 def build_pipeline(ticks: DataFrame, cfg: EngineConfig) -> PipelineOutputs:
     enriched = band_signals(N.enriched_ticks(ticks, cfg), cfg)
-    norm = enriched.select(*N.NORMALIZED_COLUMNS)
     quote_spread = F.when(
         F.col("best_bid").isNotNull() & F.col("best_ask").isNotNull(),
         F.col("best_ask") - F.col("best_bid"),
@@ -100,4 +99,4 @@ def build_pipeline(ticks: DataFrame, cfg: EngineConfig) -> PipelineOutputs:
             )
         ).alias("metadata"),
     )
-    return assemble_outputs(norm, signals, base, cfg)
+    return assemble_outputs(enriched, signals, base, cfg)

@@ -153,10 +153,6 @@ WHERE signal_position IS NOT NULL"""
 
 def build_pipeline(ticks: DataFrame, cfg: EngineConfig) -> PipelineOutputs:
     enriched = N.enriched_ticks(ticks, cfg)
-    norm = enriched.select(
-        "product_id", "event_time", "sequence", "mid_price",
-        "best_bid", "best_ask", "returns", "volatility",
-    )
     sig = (
         enriched.select("product_id", "event_time", "sequence", "mid_price")
         .groupBy("product_id")
@@ -166,8 +162,8 @@ def build_pipeline(ticks: DataFrame, cfg: EngineConfig) -> PipelineOutputs:
         F.col("best_bid").isNotNull() & F.col("best_ask").isNotNull(),
         F.col("best_ask") - F.col("best_bid"),
     )
-    base = norm.join(sig.select("product_id", "sequence", "zscore", "signal_position"),
-                     ["product_id", "sequence"], "left").select(
+    base = enriched.join(sig.select("product_id", "sequence", "zscore", "signal_position"),
+                         ["product_id", "sequence"], "left").select(
         "product_id", "event_time", "sequence", "mid_price", "returns",
         "volatility", "best_bid", "best_ask",
         quote_spread.alias("spread"),
@@ -193,4 +189,4 @@ def build_pipeline(ticks: DataFrame, cfg: EngineConfig) -> PipelineOutputs:
             )
         ).alias("metadata"),
     )
-    return assemble_outputs(norm, signals, base.drop("zscore"), cfg)
+    return assemble_outputs(enriched, signals, base.drop("zscore"), cfg)

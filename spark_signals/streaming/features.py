@@ -272,8 +272,7 @@ def replay_batch(
 
         slip_raw = slip_base + volatility_ratio * vol_mult + spread_ratio * spread_mult
         slippage_rate = 0.0 if slip_raw < 0 else (slip_max if slip_raw > slip_max else slip_raw)
-        # same inner dp=6 grid as the batch plan (positions.py latency)
-        lat_raw = lat_base + int(math.floor(math.floor(lat_vol * volatility_ratio * 1e6 + 0.5000001) / 1e6))
+        lat_raw = lat_base + math.floor(lat_vol * volatility_ratio)
         fill_latency = lat_base if lat_raw < lat_base else (lat_hi if lat_raw > lat_hi else lat_raw)
 
         out_rows.append(

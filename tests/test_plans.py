@@ -89,12 +89,17 @@ def test_rolling_features_share_one_window_stage(spark):
 
 
 def test_metrics_dag_bounded_shuffles(spark):
-    """Full DAG ticks→features→2 tumbling aggs→J2 join→ratios: the static
-    plan re-uses the windowed exchange for both agg branches; shuffle count
-    must stay bounded (8 static nodes; AQE ReuseExchange dedups at runtime)
-    and both tumbling aggs must partial-aggregate before their shuffle."""
-    out = build_pipeline(load_ticks(spark, SF))
-    p = plan_str(out.metrics)
+    """Full DAG ticks→features→2 tumbling aggs→J2 join→ratios, in the
+    explicit join form (the J2 witness; build_pipeline takes the fused
+    form): the static plan re-uses the windowed exchange for both agg
+    branches; shuffle count must stay bounded (8 static nodes; AQE
+    ReuseExchange dedups at runtime) and both tumbling aggs must
+    partial-aggregate before their shuffle."""
+    from spark_signals.parity import CFG, _metrics_chain
+    from spark_signals.pipeline import metrics as M
+
+    perf, counts = _metrics_chain(spark, SF)
+    p = plan_str(M.metrics_enriched(perf, counts, CFG))
     assert count_op(p, "Exchange") <= 8
     assert count_op(p, "Sort") <= 2
     # partial->final HashAggregate pairs = map-side combine before shuffle
@@ -115,6 +120,34 @@ def test_fused_rollup_single_scan_no_join(spark):
     assert "Join" not in p
     assert count_op(p, "Exchange") <= 3
     assert count_op(p, "Sort") <= 1
+
+
+@pytest.mark.parametrize("relation", ["metrics", "hourly_rollup"])
+def test_pipeline_metrics_are_fused_single_scan(spark, relation):
+    """build_pipeline's metrics sinks take the fused chain: one scan of the
+    ticks and no J2 join (the join form re-ran the whole window stage for
+    signal_counts)."""
+    p = plan_str(getattr(build_pipeline(load_ticks(spark, SF)), relation))
+    assert count_op(p, "Scan parquet") == 1
+    assert "Join" not in p
+
+
+def test_pinned_fanout_sinks_read_only_the_pins(spark):
+    """After persist_for_fanout every sink plan's leaves are in-memory scans
+    of the two pins (window stage, positions_costs): no sink re-scans the
+    ticks. Leaves are read from the physical plan, since an explain string
+    also prints the plan each cached relation was built from."""
+    from spark_signals.pipeline.builder import persist_for_fanout
+
+    out = persist_for_fanout(build_pipeline(load_ticks(spark, SF)))
+    try:
+        for name, df in out.sinks().items():
+            leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
+            names = [leaves.apply(i).nodeName() for i in range(leaves.size())]
+            assert names and set(names) == {"InMemoryTableScan"}, (name, names)
+    finally:
+        out.positions_costs.unpersist()
+        out.window_stage.unpersist()
 
 
 @pytest.mark.parametrize(
