@@ -15,13 +15,17 @@ from __future__ import annotations
 
 import os
 import shutil
+from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
+from typing import TypeVar
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_signals.pipeline.builder import PipelineOutputs, persist_for_fanout
+
+_Sink = TypeVar("_Sink")
 
 # per-sink event-time column for date partitioning (D1 chunking analog)
 SINK_TIME_COLUMNS = {
@@ -68,21 +72,35 @@ def write_sinks(
                 "dbtable", name
             ).option("batchsize", jdbc_batchsize).mode("append").save()
 
-    # carries the caller's local properties (job group, scheduler pool)
-    # and session tags into each write's thread
-    target = inheritable_thread_target(outputs.window_stage.sparkSession)(write)
     persist_for_fanout(outputs)
     try:
-        with ThreadPoolExecutor(max_workers=len(sinks)) as pool:
-            futures = [pool.submit(target, name, df) for name, df in sinks.items()]
-        for future in futures:
-            future.result()
+        _fan_out(outputs.window_stage.sparkSession, write, sinks)
     finally:
         # dependent pin first: releasing the window stage while the
         # positions_costs pin is unbuilt would re-plan that pin
         outputs.positions_costs.unpersist()
         outputs.window_stage.unpersist()
     return paths
+
+
+def _fan_out(
+    spark: SparkSession,
+    write: Callable[[str, _Sink], None],
+    sinks: dict[str, _Sink],
+) -> None:
+    """Run ``write(name, sink)`` for every entry of ``sinks`` concurrently,
+    one pool thread per sink, and wait for all of them; the first failure,
+    in sink order, is then re-raised.
+
+    The threads carry the caller's local properties (job group, scheduler
+    pool) and session tags, so cancelling the caller's job group cancels
+    every write.
+    """
+    target = inheritable_thread_target(spark)(write)
+    with ThreadPoolExecutor(max_workers=len(sinks)) as pool:
+        futures = [pool.submit(target, name, sink) for name, sink in sinks.items()]
+    for future in futures:
+        future.result()
 
 
 def apply_retention(spark: SparkSession, table_path: str, keep_days: int, now=None) -> int:

@@ -7,9 +7,9 @@ watermarked event-time source (T1), the stateful rolling-feature stage
 late-beyond-watermark rows exactly like Flink's default), and a
 ``foreachBatch`` multi-sink writer standing in for the StatementSet fan-out
 (S2-S7): one micro-batch computes the shared prefix once, persists it, and
-appends every sink table idempotently (batch-id-keyed overwrite gives
-exactly-once-ish delivery on retries, the Spark analog of the reference's
-JDBC retry + checkpoint contract, T5).
+writes it to every sink table as that batch's own ``_batch_id=<id>``
+directory, overwritten on a replay (exactly-once-ish delivery on retries,
+the Spark analog of the reference's JDBC retry + checkpoint contract, T5).
 """
 
 from __future__ import annotations
@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_signals.config import EngineConfig
+from spark_signals.io.sinks import _fan_out
 from spark_signals.io.sources import PRICES_RAW_SCHEMA, ensure_session_confs
 from spark_signals.pipeline import normalize as N
 from spark_signals.pipeline import positions as P
@@ -164,77 +165,70 @@ def build_streaming_features(ticks: DataFrame, cfg: EngineConfig) -> DataFrame:
     return stateful_features(ticks.withWatermark("event_time", cfg.watermark_delay), cfg)
 
 
-def multi_sink_writer(
-    out_dir: str,
-    cfg: EngineConfig,
-    zone_registry_cols: dict[str, list[str]] | None = None,
-):
+def _signals_decisions(features: DataFrame, cfg: EngineConfig) -> DataFrame:
+    """The batch ``signals_decisions`` sink projection over the feature
+    stream, P11 JSON metadata included: the stream surfaces
+    fast_sma/slow_sma (OUTPUT_SCHEMA) and the metadata is the batch sink's
+    own SQL text (sma_cross.signal_metadata_sql), so a consumer diffing
+    the two sink schemas sees no gap."""
+    return features.filter(F.col("signal_type") != "HOLD").selectExpr(
+        "*", "fast_sma - slow_sma AS sig_spread"
+    ).selectExpr(
+        f"{sql_str_lit(cfg.strategy_run_id)} AS strategy_run_id",
+        "product_id AS instrument_id",
+        "event_time AS signal_time",
+        "signal_type",
+        "position",
+        "confidence",
+        f"{S.signal_metadata_sql(cfg)} AS metadata",
+    )
+
+
+def multi_sink_writer(out_dir: str, cfg: EngineConfig):
     """foreachBatch callback fanning one micro-batch out to the reference's
-    sink tables (S2/S3/S6/S7 analogs) as partitioned parquet.
+    sink tables (S2/S3/S6/S7 analogs) as parquet, one ``_batch_id=<id>``
+    directory per batch under each sink.
 
-    The shared prefix is persisted once per micro-batch — the hand-managed
-    equivalent of the reference StatementSet's common-subplan reuse
-    (SURVEY.md §4). Writes are `replaceWhere`-style idempotent per batch id.
-
-    ``zone_registry_cols`` ({sink name: [zone columns]}) opts a sink into
-    the persisted zone-map registry (io/layout.py): after each batch's
-    write, ``zone_registry_delta`` appends zones for exactly the files the
-    batch landed — O(batch) per trigger, never a full footer re-walk — so
-    serving reads can plan from ``<sink>_zones`` immediately. A replayed
-    batch (idempotent partition overwrite) leaves dangling registry rows
-    for the replaced files; ``read_pruned_registered`` reconciles against
-    the live listing, so the lane keeps the same exactly-once-ish contract
-    as the sink itself.
+    The batch is persisted once — the hand-managed equivalent of the
+    reference StatementSet's common-subplan reuse (SURVEY.md §4).
+    ``prices_normalized`` keeps every row, so its write builds the pinned
+    batch and runs the stateful operator exactly once; the other three
+    sinks then read the pin concurrently, one task and one file each. Each
+    sink overwrites its own ``_batch_id=<id>`` directory, so a replayed
+    batch replaces exactly its previous attempt's rows, even with an empty
+    replay, and readers still discover ``_batch_id`` as a partition column.
+    A failed write leaves that sink's batch directory missing until the
+    replay.
     """
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        def write(name: str, df: DataFrame) -> None:
+            # overwriting the batch's own directory, not appending: the
+            # exactly-once-ish contract of the reference's checkpoint +
+            # retrying JDBC sinks (T5)
+            df.write.mode("overwrite").parquet(
+                os.path.join(out_dir, name, f"_batch_id={batch_id}")
+            )
+
         batch_df.persist()
         try:
             # the feature stream is positions_costs-shaped, so the batch sink
             # projections apply verbatim — streaming and batch modes write
-            # the SAME schema to the shared sink names, INCLUDING the P11
-            # JSON metadata on signals_decisions: the feature stream
-            # surfaces fast_sma/slow_sma (OUTPUT_SCHEMA) and the metadata is
-            # the batch sink's own SQL text (sma_cross.signal_metadata_sql),
-            # so a consumer diffing the two sink schemas sees no gap.
-            sinks = {
-                "prices_normalized": batch_df.select(*N.NORMALIZED_COLUMNS),
-                "signals_decisions": batch_df.filter(
-                    F.col("signal_type") != "HOLD"
-                ).selectExpr(
-                    "*", "fast_sma - slow_sma AS sig_spread"
-                ).selectExpr(
-                    f"{sql_str_lit(cfg.strategy_run_id)} AS strategy_run_id",
-                    "product_id AS instrument_id",
-                    "event_time AS signal_time",
-                    "signal_type",
-                    "position",
-                    "confidence",
-                    f"{S.signal_metadata_sql(cfg)} AS metadata",
-                ),
-                "strategy_executions": P.executions(batch_df, cfg),
-                "strategy_positions": P.position_transitions(batch_df, cfg),
-            }
-            for name, df in sinks.items():
-                # partition by batch id + dynamic partition overwrite: a
-                # replayed micro-batch (post-failure recovery) rewrites its
-                # own partition instead of appending duplicates — the
-                # exactly-once-ish contract of the reference's checkpoint +
-                # retrying JDBC sinks (T5)
-                (
-                    df.withColumn("_batch_id", F.lit(batch_id))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("_batch_id")
-                    .parquet(os.path.join(out_dir, name))
-                )
-            for name, zcols in (zone_registry_cols or {}).items():
-                from spark_signals.io.layout import zone_registry_delta
-
-                table = os.path.join(out_dir, name)
-                zone_registry_delta(
-                    batch_df.sparkSession, table, table + "_zones", zcols
-                )
+            # the SAME schema to the shared sink names
+            write("prices_normalized", batch_df.select(*N.NORMALIZED_COLUMNS))
+            # each pool thread builds its own projection, so the three
+            # plans are analysed concurrently too; these sinks keep only the
+            # signal and position-change rows, so one task (one file, one
+            # task commit) per sink and batch is plenty
+            _fan_out(
+                batch_df.sparkSession,
+                lambda name, project: write(name, project(batch_df, cfg).coalesce(1)),
+                {
+                    "signals_decisions": _signals_decisions,
+                    "strategy_executions": P.executions,
+                    "strategy_positions": P.position_transitions,
+                },
+            )
         finally:
             batch_df.unpersist()
 
@@ -250,14 +244,12 @@ def run_streaming_job(
     dedupe: bool = False,
     fmt: str = "parquet",
     max_files_per_trigger: int | None = None,
-    zone_registry_cols: dict[str, list[str]] | None = None,
 ):
     """End-to-end streaming run: source → features → multi-sink fan-out.
 
     ``available_now=True`` drains existing files then stops (deterministic
     backtest / test mode — T7); otherwise it runs continuously with the
-    60s-checkpoint cadence of the reference. ``zone_registry_cols`` opts
-    sinks into the per-batch zone-registry delta (see multi_sink_writer).
+    60s-checkpoint cadence of the reference.
     """
     cfg = cfg or EngineConfig()
     ticks = read_tick_stream(spark, source_dir, fmt=fmt, max_files_per_trigger=max_files_per_trigger)
@@ -268,9 +260,7 @@ def run_streaming_job(
     else:
         features = build_streaming_features(ticks, cfg)
     writer = (
-        features.writeStream.foreachBatch(
-            multi_sink_writer(out_dir, cfg, zone_registry_cols=zone_registry_cols)
-        )
+        features.writeStream.foreachBatch(multi_sink_writer(out_dir, cfg))
         .option("checkpointLocation", os.path.join(out_dir, "_checkpoint"))
         .outputMode("append")
     )

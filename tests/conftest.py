@@ -24,6 +24,11 @@ def spark() -> SparkSession:
     yield s
 
 
+def persistent_rdd_ids(spark: SparkSession) -> set[int]:
+    """Ids of the RDDs the session holds persisted (each pinned relation)."""
+    return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
+
+
 T0 = dt.datetime(2024, 6, 1, 12, 0, 0)
 
 

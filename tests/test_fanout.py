@@ -14,12 +14,9 @@ from spark_signals.pipeline import metrics as M
 from spark_signals.pipeline import positions as P
 from spark_signals.pipeline.builder import build_pipeline
 from spark_signals.strategies import get_strategy_module
+from tests.conftest import persistent_rdd_ids
 
 SF = "/root/testdata/sf0.001"
-
-
-def _persistent_rdd_ids(spark) -> set[int]:
-    return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
 
 
 @pytest.mark.parametrize("strategy", ["sma_cross", "breakout", "ewma_zscore"])
@@ -44,10 +41,10 @@ def test_write_sinks_failure_completes_other_sinks_and_releases_pins(spark, tmp_
     tables are written in full, and both fan-out pins are released."""
     out = build_pipeline(load_ticks(spark, SF))
     out.metrics = out.metrics.filter(F.raise_error(F.lit("injected sink failure")).isNull())
-    before = _persistent_rdd_ids(spark)
+    before = persistent_rdd_ids(spark)
     with pytest.raises(Exception, match="injected sink failure"):
         write_sinks(out, str(tmp_path))
-    assert _persistent_rdd_ids(spark) == before
+    assert persistent_rdd_ids(spark) == before
     for name, df in out.sinks().items():
         if name == "strategy_metrics":
             continue

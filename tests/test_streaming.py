@@ -19,6 +19,7 @@ from spark_signals.streaming.job import (
     run_streaming_job,
     streaming_metrics,
 )
+from tests.conftest import persistent_rdd_ids
 
 SF = "/root/testdata/sf0.001"
 
@@ -397,22 +398,18 @@ def test_streaming_restart_resumes_from_checkpoint(spark, tmp_path):
     assert got == want
 
 
-def test_zone_registry_delta_per_microbatch(spark, tmp_path):
-    """A sink opted into zone_registry_cols registers each micro-batch's
-    new files via zone_registry_delta — O(batch) appends, never a full
-    footer re-walk — and the registry-planned read prunes the OTHER
-    batches' files while returning exact rows. A replayed batch (the
-    idempotent overwrite) leaves only dangling registry rows, which the
-    reconciling read ignores."""
-    from spark_signals.config import EngineConfig
-    from spark_signals.io.layout import read_pruned_registered
-    from spark_signals.parity import _costs
-    from spark_signals.streaming.job import multi_sink_writer
-    import os as _os
+STREAMING_SINKS = [
+    "prices_normalized", "signals_decisions",
+    "strategy_executions", "strategy_positions",
+]
 
-    cfg = EngineConfig()
-    out = str(tmp_path / "zreg")
-    feats = (
+
+def _stand_in_features(spark):
+    """A positions_costs-shaped frame in the feature stream's schema, with
+    stand-ins for the signal columns the stateful operator adds."""
+    from spark_signals.parity import _costs
+
+    return (
         _costs(spark, SF)
         .withColumn(
             "signal_type",
@@ -424,37 +421,92 @@ def test_zone_registry_delta_per_microbatch(spark, tmp_path):
         .withColumn("fast_sma", F.col("mid_price"))
         .withColumn("slow_sma", F.col("mid_price"))
     )
-    writer = multi_sink_writer(
-        out, cfg, zone_registry_cols={"prices_normalized": ["sequence", "product_id"]}
+
+
+def _sink_rows(spark, out, name, batch_id):
+    return sorted(
+        tuple(r)
+        for r in spark.read.parquet(os.path.join(out, name))
+        .filter(F.col("_batch_id") == batch_id)
+        .collect()
     )
-    table = _os.path.join(out, "prices_normalized")
-    reg = table + "_zones"
 
-    writer(feats, 0)
-    n0 = spark.read.parquet(reg).count()
-    assert n0 > 0  # bootstrapped from the first delta, no separate build
 
-    # second micro-batch in a disjoint sequence range
-    writer(feats.withColumn("sequence", F.col("sequence") + F.lit(1_000_000)), 1)
-    n1 = spark.read.parquet(reg).count()
-    assert n1 > n0  # delta appended exactly the new batch's files
+def test_multi_sink_writer_replay_replaces_the_whole_batch(spark, tmp_path):
+    """A replayed batch leaves exactly the replay's rows in every sink:
+    fewer rows replace more, and an empty replay leaves none, with the
+    read schema (``_batch_id`` a partition column) unchanged."""
+    from spark_signals.streaming.job import multi_sink_writer
 
-    ranges = {"sequence": (1_000_000, 2_000_000)}
-    got = read_pruned_registered(spark, table, reg, ranges)
-    expect = spark.read.parquet(table).filter(
-        F.col("sequence").between(1_000_000, 2_000_000)
+    cfg = EngineConfig()
+    feats = _stand_in_features(spark)
+    fewer = feats.filter(F.col("sequence") < 300)
+    out, fresh = str(tmp_path / "replayed"), str(tmp_path / "fresh")
+    writer = multi_sink_writer(out, cfg)
+    writer(feats, 7)
+    columns = {n: spark.read.parquet(os.path.join(out, n)).columns for n in STREAMING_SINKS}
+    assert "_batch_id" in columns["prices_normalized"]
+
+    writer(fewer, 7)
+    multi_sink_writer(fresh, cfg)(fewer, 7)
+    for name in STREAMING_SINKS:
+        assert _sink_rows(spark, out, name, 7) == _sink_rows(spark, fresh, name, 7), name
+    assert len(_sink_rows(spark, out, "prices_normalized", 7)) == 300
+
+    writer(feats.filter(F.lit(False)), 7)
+    for name in STREAMING_SINKS:
+        assert _sink_rows(spark, out, name, 7) == [], name
+        assert spark.read.parquet(os.path.join(out, name)).columns == columns[name], name
+
+
+def test_multi_sink_writer_failure_completes_other_sinks_and_releases_pin(
+    spark, tmp_path, monkeypatch
+):
+    """One overlapped sink's job fails: the writer re-raises it, the other
+    three sinks' batch directories are written in full, and the pinned
+    batch is released."""
+    from spark_signals.pipeline import positions as P
+    from spark_signals.streaming.job import multi_sink_writer
+
+    cfg = EngineConfig()
+    feats = _stand_in_features(spark)
+    executions = P.executions
+    monkeypatch.setattr(
+        P,
+        "executions",
+        lambda df, cfg: executions(df, cfg).filter(
+            F.raise_error(F.lit("injected sink failure")).isNull()
+        ),
     )
-    assert got.count() == expect.count() == 1000
-    # batch 0's files were pruned from the plan entirely
-    assert all("_batch_id=1" in f for f in got.inputFiles())
+    out = str(tmp_path / "failed")
+    before = persistent_rdd_ids(spark)
+    with pytest.raises(Exception, match="injected sink failure"):
+        multi_sink_writer(out, cfg)(feats, 3)
+    assert persistent_rdd_ids(spark) == before
 
-    # replay batch 1 (at-least-once redelivery): rows stay exact through
-    # the reconciling read despite dangling registry rows for the
-    # replaced files
-    writer(feats.withColumn("sequence", F.col("sequence") + F.lit(1_000_000)), 1)
-    got2 = read_pruned_registered(spark, table, reg, ranges)
-    assert got2.count() == 1000
-    assert all("_batch_id=1" in f for f in got2.inputFiles())
+    monkeypatch.undo()
+    fresh = str(tmp_path / "fresh")
+    multi_sink_writer(fresh, cfg)(feats, 3)
+    for name in STREAMING_SINKS:
+        if name == "strategy_executions":
+            continue
+        assert os.path.exists(os.path.join(out, name, "_batch_id=3", "_SUCCESS")), name
+        want = _sink_rows(spark, fresh, name, 3)
+        assert _sink_rows(spark, out, name, 3) == want and len(want) > 0, name
+
+
+def test_multi_sink_writer_jobs_run_in_the_query_job_group(spark, tmp_path):
+    """Every job of a streaming query, the overlapped sink writes included,
+    runs in the query's job group (its run id), the group
+    ``StreamingQuery.stop()`` cancels: the pool threads inherit the
+    stream thread's local properties."""
+    src = str(tmp_path / "src")
+    load_ticks(spark, SF).orderBy("event_time", "sequence").coalesce(1).write.parquet(src)
+    tracker = spark.sparkContext.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup())
+    query = run_streaming_job(spark, src, str(tmp_path / "out"))
+    assert len(tracker.getJobIdsForGroup(str(query.runId))) >= 4
+    assert set(tracker.getJobIdsForGroup()) <= ungrouped
 
 
 def test_serializer_concat_warning_is_filtered_only_there():
